@@ -5,23 +5,57 @@ SURVEY.md §7.4).
 All hashing is deterministic (xxhash64 / md5 built-ins with fixed
 permutation constants) so results are reproducible run-to-run.
 
+One near-dup pipeline
+---------------------
+Every near-dup operator runs the same stages, each written once and
+handed its hash basis as an argument:
+
+1. shingle — :func:`_shingle_frame`: (id, *block_cols, grams), each
+   document's distinct character n-grams as xxhash64 longs, or as
+   strings for the md5 basis (:func:`md5_gram_sets`).
+2. signature — :func:`_minhash_signatures`: per row, the minimum of
+   each permutation ``perm(i)`` over the gram array
+   (:func:`_xxhash_perm`, a modular family over the hashed grams, or
+   :func:`_md5_perm`, ``md5("i:" || gram)``). SimHash's signature is
+   one bit-vote aggregate over per-token hashes of a given width
+   (:func:`_simhash_table`).
+3. band — :func:`_lsh_candidates`: one bucket per band (``xxhash64``
+   or ``md5`` of the band's components), a bucket self-join, distinct
+   (id_a < id_b) candidates. SimHash bands by pigeonhole chunks of a
+   64- or 32-bit signature (:func:`hash64_near_dup_pairs`).
+4. verify — :func:`_verify_jaccard_candidates`: exact Jaccard per
+   candidate, over gram bitmaps when the block (or, unblocked, the
+   global) vocabulary fits ``_BITMAP_VOCAB_CAP`` and over the gram
+   arrays otherwise. SimHash verifies ``bit_count(a XOR b)``.
+
+The basis is chosen only at the public entry points. The xxhash64
+fast paths (:func:`minhash_near_duplicates`,
+:func:`simhash_near_duplicates`) are engine-specific; their md5 twins
+(:func:`minhash_near_duplicates_md5`,
+:func:`simhash_near_duplicates_md5`) reproduce bit-for-bit in plain
+SQL, and the registered audit queries value-check them against
+DuckDB — the independent reference for the shared stages. The n-gram
+Jaccard family (:func:`ngram_jaccard_pairs`,
+:func:`jaccard_prefix_filter_pairs`, :func:`similarity_join`) reuses
+stages 1 and 4 with exact inverted-index or prefix-filter candidates
+in place of LSH banding.
+
 Scale notes
 -----------
 - Exact dedup is a hash shuffle on the dedup key — at 100 TB,
   dedup on ``md5(normalized_text)`` (16-byte key) instead of the
   full text to shrink shuffle width.
-- MinHash+LSH is the classic band-bucket-join: signatures are
-  computed scan-side (narrow), candidate generation shuffles only
-  (doc_id, band_hash) pairs, and exact Jaccard verification runs
-  only within buckets. Tune (num_perm, bands) for the target
-  similarity threshold; buckets with pathological collision counts
-  are handled by AQE skew-splitting of the self-join.
-- SimHash is computed with pure JVM expressions (64 bitplane
-  aggregations per doc). Near-dup candidates come from 16-bit
-  chunk banding (pigeonhole: hamming ≤ 3 ⇒ some chunk equal).
+- Signatures are narrow per-row maps; candidate generation shuffles
+  only (id, band hash) rows, and verification joins only the
+  candidates. Buckets with pathological collision counts are handled
+  by AQE skew-splitting of the self-join.
+- SimHash votes are pure JVM expressions; candidates come from
+  ``max_hamming + 1`` chunk banding, lossless at any threshold.
 """
 
 from __future__ import annotations
+
+from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -96,189 +130,85 @@ def dedup_by_fingerprint(
     )
 
 
-def minhash_signatures(
+def _shingle_frame(
     df: DataFrame,
     text_col: str,
     id_col: str,
-    num_perm: int = 32,
-    shingle_n: int = 5,
+    n: int,
+    block_cols: Sequence[str] = (),
+    grams_of=char_ngram_hashes_of_norm,
+    drop_empty: bool = False,
 ) -> DataFrame:
-    """MinHash signatures as (id, m0..m{k-1}) — one column per
-    permutation.
+    """(id, *block_cols, grams): each document's distinct character
+    n-grams, spread by id for the CPU-dense shingling. ``grams_of``
+    is the gram basis — hashed longs by default, strings
+    (``char_ngrams_of_norm``) for the md5 twins.
 
-    Spark-idiomatic shape: explode shingles → project the
-    ``num_perm`` permuted hashes as plain columns → ONE
-    hash-aggregate of trivial ``min(hN)`` columns. Partial
-    (map-side) aggregation means the shuffle carries one 32-long
-    row per doc per partition. Hoisting the permutation arithmetic
-    out of the aggregate expressions into the projection below it
-    measured cold 10.1 s → 4.1 s and steady 2-7 s → 0.95 s at sf0.1
-    (the generated aggregate-update code shrinks to comparisons, so
-    Janino/C2 compile far less and the hot loop tiers up fully);
-    an array-expression formulation with 32 nested transforms
-    measured ~10× slower still — codegen falls over on huge
-    expression trees. Docs with no shingles drop out (they have no
-    near-dup semantics)."""
-    hashed = (
-        _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-        .select(
-            F.col(id_col), normalize_text(F.col(text_col)).alias("nrm")
-        )
-        .select(
-            F.col(id_col),
-            F.explode(
-                char_ngram_hashes_of_norm(F.col("nrm"), shingle_n)
-            ).alias("g"),
-        )
-        .select(id_col, F.pmod(F.col("g"), F.lit(_MERSENNE)).alias("h"))
-        .select(
-            id_col,
-            *[
-                ((F.col("h") * _A[i] + _B[i]) % _MERSENNE).alias(f"h{i}")
-                for i in range(num_perm)
-            ],
-        )
+    Normalization is its own projection so the regex runs once per
+    row: inlined into the shingler it re-executes per gram (see
+    ``text.char_ngrams``). ``drop_empty`` removes documents with no
+    shingle as ``length(nrm) >= n`` BEFORE shingling, never as
+    ``size(grams) > 0`` after it: Catalyst pushes a post-hoc size()
+    filter below both projections with ``normalize_text`` re-inlined
+    into the per-ELEMENT substr lambda — one regex per shingle,
+    measured 15.7 s vs 0.8 s at sf0.1."""
+    keep = [F.col(id_col), *[F.col(c) for c in block_cols]]
+    nrm = _spread(df.select(*keep, F.col(text_col)), id_col).select(
+        *keep, normalize_text(F.col(text_col)).alias("nrm")
     )
-    return hashed.groupBy(id_col).agg(
-        *[F.min(f"h{i}").alias(f"m{i}") for i in range(num_perm)]
-    )
+    if drop_empty:
+        nrm = nrm.filter(F.length("nrm") >= n)
+    return nrm.select(*keep, grams_of(F.col("nrm"), n).alias("grams"))
 
 
-def minhash_near_duplicates(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    num_perm: int = 32,
-    bands: int = 8,
-    shingle_n: int = 5,
-    threshold: float = 0.6,
-    persist: bool = False,
-    pin_result: bool = True,
-    grams: DataFrame | None = None,
-    bits: DataFrame | None = None,
+# MinHash permutation families: ``perm(i)`` maps one gram to its
+# value under permutation i. Bound through an outer closure because
+# ``F.transform`` passes (element, index) to any two-argument
+# callable — ``lambda g, i=i: ...`` would silently receive the ARRAY
+# INDEX as ``i``.
+def _xxhash_perm(i: int):
+    """Permutation i of an xxhash64 gram: ``(a·g + b) mod 2^31-1``."""
+    return lambda g: (F.pmod(g, F.lit(_MERSENNE)) * _A[i] + _B[i]) % _MERSENNE
+
+
+def _md5_perm(i: int):
+    """Permutation i of a string gram: ``md5("i:" || gram)``."""
+    return lambda g: F.md5(F.concat_ws(":", F.lit(str(i)), g))
+
+
+def _minhash_signatures(
+    shingles: DataFrame, id_col: str, num_perm: int, perm
 ) -> DataFrame:
-    """MinHash+LSH near-duplicate pairs with exact-Jaccard
-    verification. Returns (id_a, id_b, jaccard), id_a < id_b.
-
-    ``grams`` / ``bits`` accept pre-built, ideally session-memoized
-    frames on the STRING gram basis (:func:`md5_gram_sets` /
-    the gram-bitmap frame from ``plans.doc_clusters.md5_gram_bits``)
-    — the same contract as the md5 twin. The xxhash64 signature
-    basis is derived from them per row (``xxhash64`` over a distinct
-    string-gram set IS the distinct hash set this path shingles
-    itself; ``array_min`` is duplicate-insensitive, so a 64-bit
-    collision cannot change a signature), and candidate pairs verify
-    against the bitmaps with jaccard values identical to the hashed
-    arrays — both count the same distinct-gram sets. With both
-    frames provided this path never rescans the corpus at all: one
-    per-row projection over the pinned gram table, the band
-    self-join, and a popcount verify.
-
-    ``pin_result`` (default on) ends the pipeline with a lazy
-    ``localCheckpoint`` of the verified pairs — the same hazard fix
-    as :func:`_verify_jaccard_candidates`: callers sort the pairs,
-    and range partitioning SAMPLES its child, re-executing the
-    whole band-join + verify pipeline a second time. Pass ``False``
-    when the caller immediately re-materializes the pairs itself.
-
-    Pipeline (r12 restructure, guide §2.4/§1.2): the shingle frame
-    is built ONCE and eagerly pinned (it feeds the signatures, the
-    vocabulary statistic, and the exact verification — previously
-    each reference re-ran the normalize+shingle pipeline, and the
-    two verify-side broadcast jobs re-ran it CONCURRENTLY before a
-    lazy pin could land); signatures are computed PER ROW over the
-    pinned gram arrays (``array_min(transform(...))`` — min over a
-    distinct array equals min over the exploded group, zero
-    shuffles) instead of explode + 32-column aggregate; the banded
-    frame is pinned so the bucket self-join's two sides read one
-    tiny materialized table instead of re-running the signature
-    build twice. Only ids and band hashes ever shuffle.
-
-    Exact verification dispatches like the ngram family
-    (:func:`_verify_jaccard_candidates`): when the corpus-wide
-    distinct-gram vocabulary fits ``_BITMAP_VOCAB_CAP``, candidates
-    verify over per-document gram BITMAPS (popcount of AND —
-    identical jaccard values, no per-pair hash-set build). The r11
-    note about an un-memoized bitmap dispatch being 13× slower no
-    longer applies: the vocab scalar and the bitmap build now run
-    over the eagerly-pinned gram frame (one cheap pass each) instead
-    of re-running the whole shingle pipeline per reference. Measured
-    at sf0.1/local[32]: the array verify stage was 21-60 s executor
-    CPU for 158k candidates (pass-to-pass GC instability — the r11
-    driver's 9.0 s wall regression); the bitmap verify removes that
-    allocation entirely. Large-vocabulary corpora keep the array
-    path (a bitmap would be wider than the gram array itself).
-
-    ``persist=True`` is accepted for compatibility but subsumed: the
-    shingle frame is always materialized exactly once per call now.
-
-    Scaling note (the 30× sf0.1→sf1 bench slope, SCALE.md): the
-    superlinear number is OUTPUT-driven, not plan-driven — the sf1
-    corpus contains ~250k true near-dup pairs vs ~250 at sf0.1
-    (each doc's near-dup family grows with corpus size), so the
-    candidate set, the verification joins, and the result itself
-    grow ~1000× while the input grows 10×. The pairs are pinned by
-    the hash-green md5 twin (``minhash_near_duplicates_md5``;
-    sf1 gate: 249,490 twin pairs value-checked, fast path re-finds
-    99.77% — ``minhash_fastpath_audit``). On a corpus whose dup
-    rate is constant in corpus size, this path is linear in input
-    plus output."""
-    from big_data_processing_spark.partitioning import pin_now
-
-    rows = num_perm // bands
-    if grams is not None:
-        # memoized string-gram basis: hash per row, never rescan.
-        # Pinned NOW: projection collapse would otherwise inline this
-        # array into each of the num_perm signature transforms below
-        # — xxhash64 + array_distinct re-evaluated 32× per row
-        # (measured: 21.7 s + 16.7 s cumulative CPU for the two band
-        # sides at sf0.1; pinned, the hash runs once per gram)
-        shingled = pin_now(grams.select(
-            F.col(id_col),
-            F.array_distinct(
-                F.transform(F.col("grams"), lambda g: F.xxhash64(g))
-            ).alias("grams"),
-        ))
-    else:
-        shingled = pin_now(
-            _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-            .select(
-                F.col(id_col), normalize_text(F.col(text_col)).alias("nrm")
-            )
-            .select(
-                F.col(id_col),
-                char_ngram_hashes_of_norm(F.col("nrm"), shingle_n).alias(
-                    "grams"
-                ),
-            )
-            # referenced by the signature build, the vocab statistic
-            # and the verify joins — materialized NOW (pin_now): the
-            # verify-side broadcast jobs launch concurrently, so a
-            # purely lazy pin re-runs the pipeline once per reference
-        )
-
-    # per-row signatures: min over the distinct gram array equals
-    # min over the exploded (id, gram) group, with zero shuffles;
-    # docs with no shingles drop out exactly like the explode did
-    def _perm(i: int):
-        return lambda g: (
-            F.pmod(g, F.lit(_MERSENNE)) * _A[i] + _B[i]
-        ) % _MERSENNE
-
-    sig = shingled.filter(F.size("grams") > 0).select(
+    """(id, m0..m{k-1}): component i is the minimum of ``perm(i)``
+    over the row's gram array — a narrow per-row map with ZERO
+    shuffles. Min over a distinct gram array equals min over the
+    exploded (id, gram) group; the explode → distinct → join →
+    groupBy-min formulation it replaced shuffled every gram instance
+    (md5 basis measured 9.9 s vs 1.0 s at sf0.1, bit-identical). A
+    document with an empty array gets null components; callers drop
+    those rows first."""
+    return shingles.select(
         F.col(id_col),
         *[
-            F.array_min(F.transform(F.col("grams"), _perm(i))).alias(
-                f"m{i}"
-            )
+            F.array_min(F.transform(F.col("grams"), perm(i))).alias(f"m{i}")
             for i in range(num_perm)
         ],
     )
 
+
+def _lsh_candidates(
+    sig: DataFrame, id_col: str, num_perm: int, bands: int, bucket
+) -> DataFrame:
+    """Distinct (id_a, id_b), id_a < id_b, of documents sharing a band
+    bucket: band b hashes components ``b·r .. b·r+r-1`` (``r =
+    num_perm // bands``) with ``bucket`` (``F.xxhash64`` or
+    ``F.md5``), and the banded rows self-join on (band, bucket). Only
+    ids and band hashes shuffle."""
+    rows = num_perm // bands
     band_cols = [
         F.struct(
             F.lit(b).alias("band"),
-            F.xxhash64(
+            bucket(
                 F.concat_ws(",", *[
                     F.col(f"m{b * rows + r}").cast("string")
                     for r in range(rows)
@@ -287,14 +217,10 @@ def minhash_near_duplicates(
         )
         for b in range(bands)
     ]
-    # no pin: both self-join sides re-derive this from the PINNED
-    # gram table — a cheap projection, and the two runs overlap as
-    # concurrent jobs, whereas a pin here is one more serial action
     banded = sig.select(
         id_col, F.explode(F.array(*band_cols)).alias("bb")
     ).select(id_col, "bb.band", "bb.bucket")
-
-    cand = (
+    return (
         banded.alias("a")
         .join(banded.alias("b"), on=["band", "bucket"])
         .select(
@@ -305,101 +231,140 @@ def minhash_near_duplicates(
         .dropDuplicates(["id_a", "id_b"])
     )
 
-    if bits is not None:
-        return _verify_jaccard_candidates_bitmap(
-            bits, cand, id_col, threshold, pin_result=pin_result
-        )
 
-    # exact verification — bitmaps when the corpus vocabulary fits
-    # (one vocab-sized pass over the PINNED gram frame), arrays
-    # otherwise; identical values either way
-    vocab_src = (
-        shingled.select(F.explode("grams").alias("g"))
-        .distinct()
-        .localCheckpoint(eager=False)
+def minhash_signatures(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 32,
+    shingle_n: int = 5,
+) -> DataFrame:
+    """MinHash signatures as (id, m0..m{k-1}) — one column per
+    permutation, on the xxhash64 basis of
+    :func:`minhash_near_duplicates`. Docs with no shingles drop out
+    (they have no near-dup semantics)."""
+    shingles = _shingle_frame(df, text_col, id_col, shingle_n, drop_empty=True)
+    return _minhash_signatures(shingles, id_col, num_perm, _xxhash_perm)
+
+
+def minhash_near_duplicates(
+    df: DataFrame,
+    text_col: str,
+    id_col: str,
+    num_perm: int = 32,
+    bands: int = 8,
+    shingle_n: int = 5,
+    threshold: float = 0.6,
+    pin_result: bool = True,
+    grams: DataFrame | None = None,
+    bits: DataFrame | None = None,
+) -> DataFrame:
+    """MinHash+LSH near-duplicate pairs on the xxhash64 basis with
+    exact-Jaccard verification. Returns (id_a, id_b, jaccard),
+    id_a < id_b.
+
+    ``grams`` / ``bits`` accept pre-built, ideally session-memoized
+    frames on the STRING gram basis (:func:`md5_gram_sets` / the
+    gram-bitmap frame from ``plans.doc_clusters.md5_gram_bits``) —
+    the same contract as the md5 twin. ``xxhash64`` over a distinct
+    string-gram set IS the distinct hash set this path shingles
+    itself (``array_min`` is duplicate-insensitive, so a 64-bit
+    collision cannot change a signature), and the bitmaps count the
+    same distinct-gram sets, so the jaccard values are identical.
+    With both frames this path never rescans the corpus; without
+    ``bits``, :func:`_verify_jaccard_candidates` picks bitmaps or
+    arrays from the global vocabulary of the hashed grams.
+
+    ``pin_result`` (default on) ends with a lazy ``localCheckpoint``
+    of the verified pairs: callers sort them, and range partitioning
+    SAMPLES its child, re-executing the band join + verify a second
+    time. Pass ``False`` when the caller re-materializes the pairs.
+
+    The hashed gram frame is pinned NOW: it feeds the signatures, the
+    vocabulary statistic and the verify joins, whose broadcast jobs
+    launch concurrently — a lazy pin re-runs the shingle pipeline
+    once per reference. Pinned, projection collapse also cannot
+    inline the per-row ``xxhash64`` into each of the ``num_perm``
+    signature transforms (measured 21.7 s + 16.7 s cumulative CPU for
+    the two band sides at sf0.1). The banded frame is not pinned:
+    both self-join sides re-derive it from the pinned grams as
+    concurrent jobs, cheaper than one more serial action.
+
+    Scaling note (the 30× sf0.1→sf1 bench slope, SCALE.md): the
+    superlinear number is OUTPUT-driven — the sf1 corpus contains
+    ~250k true near-dup pairs vs ~250 at sf0.1, so candidates,
+    verification and the result grow ~1000× while the input grows
+    10×. The md5 twin pins the pairs (sf1 gate: 249,490 twin pairs
+    value-checked, fast path re-finds 99.77% —
+    ``minhash_fastpath_audit``). On a corpus whose dup rate is
+    constant in corpus size, this path is linear in input plus
+    output."""
+    from big_data_processing_spark.partitioning import pin_now
+
+    if grams is not None:
+        shingled = pin_now(grams.select(
+            F.col(id_col),
+            F.array_distinct(
+                F.transform(F.col("grams"), lambda g: F.xxhash64(g))
+            ).alias("grams"),
+        ))
+    else:
+        shingled = pin_now(_shingle_frame(df, text_col, id_col, shingle_n))
+    sig = _minhash_signatures(
+        shingled.filter(F.size("grams") > 0), id_col, num_perm, _xxhash_perm
     )
-    vocab = vocab_src.count()
-    if 0 < vocab <= _BITMAP_VOCAB_CAP:
-        own_bits = _bitmap_doc_frame(
-            shingled, [], id_col, _block_gram_dicts(vocab_src, []),
-            (vocab + 63) // 64,
-        )
-        return _verify_jaccard_candidates_bitmap(
-            own_bits, cand, id_col, threshold, pin_result=pin_result
-        )
-
-    # keyless spread: the keyed form is planner-eliminated against
-    # the dropDuplicates exchange and the surviving exchange is then
-    # AQE-coalesced by BYTES — wrong width for the CPU-dense
-    # array-jaccard verification (see partitioning.spread_even)
-    from big_data_processing_spark.partitioning import spread_even
-
-    pairs = spread_even(cand).join(
-        shingled.select(
-            F.col(id_col).alias("id_a"), F.col("grams").alias("sh_a")
-        ),
-        on="id_a",
-    ).join(
-        shingled.select(
-            F.col(id_col).alias("id_b"), F.col("grams").alias("sh_b")
-        ),
-        on="id_b",
+    cand = _lsh_candidates(sig, id_col, num_perm, bands, F.xxhash64)
+    return _verify_jaccard_candidates(
+        shingled, cand, id_col, threshold, pin_result=pin_result, bits=bits
     )
-    # |A ∪ B| = |A| + |B| - |A ∩ B| exactly: the shingle arrays are
-    # array_distinct products. The identity avoids materializing a
-    # union ARRAY per pair — array_union allocated ~|A|+|B| elements
-    # per candidate, and the resulting allocation/GC pressure made
-    # the verify stage wildly unstable at sf0.1 (passes of 2-20 s
-    # wall, 419 s CPU worst case for 158k candidates vs ~19 s for
-    # the size-identity form).
-    inter = F.size(F.array_intersect("sh_a", "sh_b"))
-    union = F.size("sh_a") + F.size("sh_b") - inter
-    jac = F.when(union > 0, inter.cast("double") / union).otherwise(F.lit(0.0))
-    out = (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out.localCheckpoint(eager=False) if pin_result else out
 
 
-def simhash64_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    """64-bit SimHash per document as (id, simhash long).
+def _simhash_table(hashed: DataFrame, id_col: str, width: int) -> DataFrame:
+    """(id, h) token-hash rows → (id, simhash): bit i of the
+    ``width``-bit signature is set when more of the document's tokens
+    (with multiplicity) have bit i set than clear; ties clear it.
 
     Bit-EXPLODED formulation: (token, bit) rows → ``sum(±1)`` votes
     per (doc, bit) → signs recombined by a second tiny aggregate.
-    The 64×-row explode looks wasteful but wins decisively over a
-    64-vote-column single aggregate (measured 2× cold, 4× warm):
-    the expression tree is ~64× smaller (codegen compiles in ms, not
-    seconds) and both aggregations run map-side partial, so the
-    shuffle carries ≤ 64 small rows per doc per partition."""
+    The ``width``×-row explode looks wasteful but wins decisively
+    over a vote-column-per-bit single aggregate (measured 2× cold, 4×
+    warm at 64 bits): the expression tree is ~64× smaller and both
+    aggregations run map-side partial, so the shuffle carries ≤
+    ``width`` small rows per doc per partition. ``shiftleft(1L, 63)``
+    is the sign bit, so a 64-bit signature is a plain long."""
+    votes = (
+        hashed.select(
+            F.col(id_col),
+            F.explode(F.sequence(F.lit(0), F.lit(width - 1))).alias("bit"),
+            "h",
+        )
+        .select(
+            id_col,
+            "bit",
+            F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("v"),
+        )
+        .groupBy(id_col, "bit")
+        .agg(F.sum("v").alias("vs"))
+    )
+    return votes.groupBy(id_col).agg(
+        F.sum(
+            F.when(F.col("vs") > 0, F.expr("shiftleft(1L, bit)")).otherwise(
+                F.lit(0).cast("long")
+            )
+        ).alias("simhash")
+    )
+
+
+def simhash64_table(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
+    """64-bit SimHash per document as (id, simhash long): xxhash64
+    votes over the whitespace tokens of the normalized text."""
     token = F.explode(F.split(normalize_text(F.col(text_col)), " ")).alias("t")
     hashed = (
         _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
         .select(F.col(id_col), token)
         .select(id_col, F.xxhash64("t").alias("h"))
     )
-    bits = hashed.select(
-        id_col,
-        F.explode(F.sequence(F.lit(0), F.lit(63))).alias("bit"),
-        "h",
-    ).select(
-        id_col,
-        "bit",
-        F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("v"),
-    )
-    votes = bits.groupBy(id_col, "bit").agg(F.sum("v").alias("vs"))
-    bit_value = F.expr(
-        "CASE WHEN bit < 63 THEN shiftleft(1L, bit) "
-        "ELSE CAST(-9223372036854775808 AS BIGINT) END"
-    )
-    return votes.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("vs") > 0, bit_value).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("simhash")
-    )
+    return _simhash_table(hashed, id_col, 64)
 
 
 def hash64_near_dup_pairs(
@@ -407,33 +372,34 @@ def hash64_near_dup_pairs(
     id_col: str,
     hash_col: str,
     max_hamming: int = 3,
+    width: int = 64,
 ) -> DataFrame:
-    """Near-dup pairs over ANY 64-bit signature column (SimHash,
-    image dHash, audio fingerprint): the 64 bits are split into
-    ``max_hamming + 1`` contiguous chunks, so a pair within the
-    threshold has at least one chunk equal by pigeonhole — banding
-    is LOSSLESS at any threshold, not just the default 3 (r9
-    ADVICE: a fixed 4×16-bit split silently under-recalled for
-    max_hamming > 3). Candidates are verified with
+    """Near-dup pairs over ANY signature column of ``width`` bits
+    (64: SimHash, image dHash, audio fingerprint; 32: the md5 SimHash
+    twin): the bits are split into ``max_hamming + 1`` contiguous
+    chunks, so a pair within the threshold has at least one chunk
+    equal by pigeonhole — banding is LOSSLESS at any threshold (r9
+    ADVICE: a fixed 4-chunk split silently under-recalled past
+    max_hamming 3). Candidates are verified with
     ``bit_count(a XOR b) <= max_hamming``. Returns
     (id_a, id_b, hamming) with id_a < id_b. The self-join shuffles
     (id, hash, chunk key) rows only: (max_hamming + 1) × 20-ish
     bytes per row at any corpus size — larger thresholds pay more
     bands AND denser buckets, the honest LSH trade."""
-    if not 0 <= max_hamming <= 63:
+    if not 0 <= max_hamming < width:
         raise ValueError(
-            f"max_hamming must be in 0..63, got {max_hamming} "
-            "(64-bit signatures cannot band beyond 63)"
+            f"max_hamming must be in 0..{width - 1}, got {max_hamming} "
+            f"({width}-bit signatures cannot band beyond {width - 1})"
         )
     n = max_hamming + 1
-    bounds = [64 * c // n for c in range(n + 1)]
+    bounds = [width * c // n for c in range(n + 1)]
 
     def chunk_key(c: int):
-        lo, width = bounds[c], bounds[c + 1] - bounds[c]
-        if width >= 64:  # max_hamming=0: exact-equality join
+        lo, chunk_width = bounds[c], bounds[c + 1] - bounds[c]
+        if chunk_width >= width:  # max_hamming=0: exact-equality join
             return F.col(hash_col)
         return F.shiftrightunsigned(hash_col, lo).bitwiseAND(
-            F.lit((1 << width) - 1)
+            F.lit((1 << chunk_width) - 1)
         )
 
     chunks = F.array(*[
@@ -466,23 +432,30 @@ def hash64_near_dup_pairs(
     )
 
 
+def _simhash_pairs(
+    sim: DataFrame, id_col: str, max_hamming: int, width: int
+) -> DataFrame:
+    """Chunk-banded pairs of an (id, simhash) table. The self-join
+    references the table on both sides, so it is pinned lazily once
+    instead of re-voting every bitplane twice; spread first so the
+    checkpoint doesn't freeze an AQE-coalesced 1-partition layout."""
+    pinned = _spread(sim, id_col).localCheckpoint(eager=False)
+    return hash64_near_dup_pairs(pinned, id_col, "simhash", max_hamming, width)
+
+
 def simhash_near_duplicates(
     df: DataFrame,
     text_col: str,
     id_col: str,
     max_hamming: int = 3,
 ) -> DataFrame:
-    """SimHash near-dup pairs: 16-bit-chunk banding for candidates
-    (hamming ≤ 3 ⇒ at least one of 4 chunks equal), verified with
-    ``bit_count(a XOR b) <= max_hamming``."""
-    # the chunk self-join references sim on both sides — materialize
-    # the (id, simhash) table once instead of re-voting 64 bitplanes
-    # twice; _spread first so the checkpoint doesn't freeze an
-    # AQE-coalesced 1-partition layout (see minhash_near_duplicates)
-    sim = _spread(
-        simhash64_table(df, text_col, id_col), id_col
-    ).localCheckpoint(eager=False)
-    return hash64_near_dup_pairs(sim, id_col, "simhash", max_hamming)
+    """SimHash near-dup pairs on the 64-bit xxhash64 basis
+    (:func:`simhash64_table`), chunk-banded and verified with
+    ``bit_count(a XOR b) <= max_hamming`` by
+    :func:`hash64_near_dup_pairs`."""
+    return _simhash_pairs(
+        simhash64_table(df, text_col, id_col), id_col, max_hamming, 64
+    )
 
 
 def ngram_jaccard_pairs(
@@ -508,7 +481,7 @@ def ngram_jaccard_pairs(
     valve: candidate pairs are generated only from grams whose
     block-local document frequency is ≤ max_df (bounding candidate
     work at max_df × corpus grams — linear), then each candidate's
-    Jaccard is verified EXACTLY on the full gram arrays, so every
+    Jaccard is verified EXACTLY on the full gram sets, so every
     returned value is exact and every returned pair is real. The
     approximation is one-sided recall: a pair sharing ONLY
     ubiquitous grams is missed — precisely the pairs whose shared
@@ -539,32 +512,23 @@ def ngram_jaccard_pairs(
         )
     from big_data_processing_spark.partitioning import pin_now
 
-    base = pin_now(
-        _spread(
-            df.select(
-                F.col(id_col), *[F.col(c) for c in block_cols],
-                F.col(text_col),
-            ),
-            id_col,
+    # referenced 4× below (sizes both sides, grams both sides).
+    # Materialized NOW (pin_now): the verify joins broadcast both
+    # sides, and those BroadcastExchange jobs launch CONCURRENTLY —
+    # with a purely lazy checkpoint each one recomputes the
+    # normalize+shingle pipeline before any blocks exist (measured at
+    # sf0.1: the gram subtree executed 3× in one build, two of them
+    # as simultaneous broadcast jobs).
+    base = pin_now(_shingle_frame(df, text_col, id_col, n, block_cols))
+    if max_df is not None:
+        # one gram-df aggregate serves the candidate cap AND the
+        # verifier's bitmap dispatch — vocab-sized, cheap to hold
+        gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+        cand = _capped_candidates(base, block_cols, id_col, max_df, gram_df)
+        return _verify_jaccard_candidates(
+            base, cand, id_col, threshold, pin_result=pin_result,
+            gram_df=gram_df, block_cols=block_cols,
         )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            normalize_text(F.col(text_col)).alias("nrm"),
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            char_ngram_hashes_of_norm(F.col("nrm"), n).alias("grams"),
-        )
-        # referenced 4× below (sizes both sides, arrays both sides).
-        # Materialized NOW (pin_now): the verify joins broadcast both
-        # array sides, and those BroadcastExchange jobs launch
-        # CONCURRENTLY — with a purely lazy checkpoint each one
-        # recomputes the normalize+shingle pipeline before any blocks
-        # exist (measured at sf0.1: the gram subtree executed 3× in
-        # one build, two of them as simultaneous broadcast jobs).
-    )
     # Inverted-index formulation: explode grams, self-join on
     # (block, gram), COUNT shared grams per pair with map-side
     # partial aggregation. The shuffle carries (id_a, id_b, count)
@@ -572,27 +536,7 @@ def ngram_jaccard_pairs(
     # alternative shuffled both ~300-long arrays per candidate pair:
     # GBs at sf0.1, measured ~2.5× slower). Zero-intersection pairs
     # simply never appear, which is exact for any threshold > 0.
-    exploded = base.select(
-        *block_cols, F.col(id_col), F.explode("grams").alias("g")
-    )
-    if max_df is not None:
-        # one gram-df aggregate serves the candidate cap AND the
-        # verifier's bitmap dispatch — vocab-sized, cheap to hold
-        gram_df = (
-            exploded.groupBy(*block_cols, "g")
-            .agg(F.count(F.lit(1)).alias("__df"))
-            .localCheckpoint(eager=False)
-        )
-        cand = _capped_candidates(
-            exploded, block_cols, id_col, max_df, gram_df=gram_df
-        )
-        # exact verification — bitmaps on small-vocabulary corpora,
-        # full gram arrays otherwise; only the (small) candidate set
-        # pays the per-pair work either way
-        return _verify_jaccard_candidates(
-            base, cand, id_col, threshold, pin_result=pin_result,
-            gram_df=gram_df, block_cols=block_cols,
-        )
+    exploded = _gram_rows(base, block_cols, id_col)
     inter_counts = (
         exploded.select(*block_cols, F.col(id_col).alias("id_a"), "g")
         .join(
@@ -613,6 +557,38 @@ def ngram_jaccard_pairs(
         sizes.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b")),
         on="id_b",
     )
+    return _jaccard_at_least(pairs, threshold)
+
+
+def _gram_rows(
+    base: DataFrame, block_cols: Sequence[str], id_col: str
+) -> DataFrame:
+    """(*block_cols, id, g): one row per distinct gram of a shingle
+    frame."""
+    return base.select(
+        *block_cols, F.col(id_col), F.explode("grams").alias("g")
+    )
+
+
+def _gram_df(base: DataFrame, block_cols: Sequence[str]) -> DataFrame:
+    """(*block_cols, g, __df): block-local document frequency of each
+    gram — the statistic the df cap, the prefix order, the plan
+    choice and the bitmap dispatch all key on."""
+    return (
+        base.select(*block_cols, F.explode("grams").alias("g"))
+        .groupBy(*block_cols, "g")
+        .agg(F.count(F.lit(1)).alias("__df"))
+    )
+
+
+def _jaccard_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """(id_a, id_b, inter, sz_a, sz_b) → (id_a, id_b, jaccard) with
+    the exact ``|A∩B| / (|A|+|B|−|A∩B|)`` rounded to 6 places, kept
+    where it reaches ``threshold``. The size identity is exact over
+    distinct-gram sets and never materializes a union per pair —
+    ``array_union`` allocated ~|A|+|B| elements per candidate and
+    made the verify stage wildly unstable at sf0.1 (2-20 s wall,
+    419 s CPU worst case for 158k candidates)."""
     union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
     jac = F.when(
         union > 0, F.col("inter").cast("double") / union
@@ -632,9 +608,12 @@ def ngram_jaccard_pairs(
 _BITMAP_VOCAB_CAP = 4096
 
 
-def _max_block_vocab(gram_df: DataFrame, block_cols: list[str]) -> int:
+def _max_block_vocab(gram_df: DataFrame, block_cols: Sequence[str]) -> int:
     """Largest per-block distinct-gram count — the statistic the
-    bitmap-verify dispatch keys on. One vocab-sized aggregate job."""
+    bitmap-verify dispatch keys on. One vocab-sized aggregate job;
+    without block columns, the row count of the global vocabulary."""
+    if not block_cols:
+        return gram_df.count()
     row = (
         gram_df.groupBy(*block_cols)
         .agg(F.count(F.lit(1)).alias("__v"))
@@ -645,7 +624,7 @@ def _max_block_vocab(gram_df: DataFrame, block_cols: list[str]) -> int:
 
 
 def _block_gram_dicts(
-    gram_df: DataFrame, block_cols: list[str]
+    gram_df: DataFrame, block_cols: Sequence[str]
 ) -> DataFrame:
     """Flat per-block dense gram dictionary for the bitmap verifier:
     (*block_cols, g, __w word index, __b single-bit mask). Gram ids
@@ -679,11 +658,10 @@ def _block_gram_dicts(
 
 def _bitmap_doc_frame(
     base: DataFrame,
-    block_cols: list[str],
+    block_cols: Sequence[str],
     id_col: str,
     dicts: DataFrame,
     n_words: int,
-    gram_col: str = "grams",
 ) -> DataFrame:
     """(id, __sz, __bits) — each document's distinct-gram set as an
     ``n_words``-long bitmap under its block's dictionary. One
@@ -697,9 +675,9 @@ def _bitmap_doc_frame(
     word paid n_words conditionals per gram instance). A
     trailing-zero-padded global width is exact: AND of zero words
     adds zero popcount."""
-    ent = base.select(
-        *block_cols, F.col(id_col), F.explode(gram_col).alias("g")
-    ).join(F.broadcast(dicts), on=[*block_cols, "g"])
+    ent = _gram_rows(base, block_cols, id_col).join(
+        F.broadcast(dicts), on=[*block_cols, "g"]
+    )
     zero = F.lit(0).cast("long")
     perword = ent.groupBy(id_col, "__w").agg(
         F.bit_or("__b").alias("__word"),
@@ -737,67 +715,33 @@ def _bitmap_doc_frame(
     return pin_now(out)
 
 
-def _verify_jaccard_candidates_bitmap(
-    bits: DataFrame,
-    cand: DataFrame,
+def _gram_bitmaps(
+    base: DataFrame,
     id_col: str,
-    threshold: float,
-    pin_result: bool = True,
-) -> DataFrame:
-    """Exact Jaccard verification over per-document gram BITMAPS:
-    ``|A∩B|`` is the summed popcount of the pairwise AND — a few
-    dozen long ops per candidate instead of ``array_intersect``'s
-    per-pair hash-set build over hundreds of elements (measured at
-    sf0.1: the array verifier was the suite's single largest CPU
-    sink, 118 s executor CPU for 585k candidates in one build).
-    The values are IDENTICAL to the array path: both compute
-    ``|A∩B| / (|A|+|B|−|A∩B|)`` over the same distinct-gram-hash
-    sets, only the set representation differs."""
-    from big_data_processing_spark.partitioning import spread_even
-
-    ba = bits.select(
-        F.col(id_col).alias("id_a"),
-        F.col("__sz").alias("__sa"),
-        F.col("__bits").alias("__wa"),
-    )
-    bb = bits.select(
-        F.col(id_col).alias("id_b"),
-        F.col("__sz").alias("__sb"),
-        F.col("__bits").alias("__wb"),
-    )
-    zero = F.lit(0).cast("long")
-    verified = (
-        spread_even(cand)
-        .join(ba, on="id_a")
-        .join(bb, on="id_b")
-        .select(
-            "id_a",
-            "id_b",
-            F.aggregate(
-                F.zip_with(
-                    "__wa",
-                    "__wb",
-                    lambda x, y: F.bit_count(x.bitwiseAND(y)).cast(
-                        "long"
-                    ),
-                ),
-                zero,
-                lambda a, b: a + b,
-            ).alias("inter"),
-            F.col("__sa").alias("sz_a"),
-            F.col("__sb").alias("sz_b"),
+    gram_df: DataFrame | None = None,
+    block_cols: Sequence[str] = (),
+) -> DataFrame | None:
+    """Per-document gram bitmaps of the (id, *block_cols, grams)
+    frame ``base`` (:func:`_bitmap_doc_frame`), or ``None`` when the
+    largest block vocabulary is empty or exceeds
+    ``_BITMAP_VOCAB_CAP`` — a bitmap would then be wider than the
+    gram array itself. The vocabulary comes from the caller's
+    (pinned) per-block ``gram_df``; without one, the distinct grams
+    of ``base`` are found in one vocab-sized pass and pinned lazily,
+    since the dictionary build reads them again."""
+    if gram_df is None:
+        gram_df = (
+            base.select(*block_cols, F.explode("grams").alias("g"))
+            .distinct()
+            .localCheckpoint(eager=False)
         )
+    vocab = _max_block_vocab(gram_df, block_cols)
+    if not 0 < vocab <= _BITMAP_VOCAB_CAP:
+        return None
+    return _bitmap_doc_frame(
+        base, block_cols, id_col, _block_gram_dicts(gram_df, block_cols),
+        (vocab + 63) // 64,
     )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    jac = F.when(
-        union > 0, F.col("inter").cast("double") / union
-    ).otherwise(F.lit(0.0))
-    out = (
-        verified.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
-    return out.localCheckpoint(eager=False) if pin_result else out
 
 
 def _verify_jaccard_candidates(
@@ -807,11 +751,25 @@ def _verify_jaccard_candidates(
     threshold: float,
     pin_result: bool = True,
     gram_df: DataFrame | None = None,
-    block_cols: list[str] | None = None,
+    block_cols: Sequence[str] = (),
+    bits: DataFrame | None = None,
 ) -> DataFrame:
     """Exact Jaccard verification of a candidate pair set against the
-    full (id, grams) arrays in ``base``. Only the candidate set pays
-    the per-pair array shuffle; every returned value is exact.
+    (id, grams) sets in ``base``; only the candidates pay per-pair
+    work, and every returned value is exact.
+
+    The set representation is chosen here. ``bits`` (a pre-built,
+    ideally memoized :func:`_bitmap_doc_frame` over the same grams)
+    is used as given; otherwise :func:`_gram_bitmaps` builds one when
+    the vocabulary — per block from ``gram_df``, or global without
+    block columns — fits ``_BITMAP_VOCAB_CAP``. On bitmaps ``|A∩B|``
+    is the summed popcount of the pairwise AND, a few dozen long ops
+    per candidate instead of ``array_intersect``'s per-pair hash-set
+    build over hundreds of elements (measured at sf0.1: the array
+    verifier was the suite's single largest CPU sink, 118 s executor
+    CPU for 585k candidates in one build). Large vocabularies keep
+    the gram arrays. Both count the same distinct-gram sets, so the
+    values are IDENTICAL.
 
     Two measured plan hazards (r11 optimization, sf0.1 stage
     metrics):
@@ -833,58 +791,52 @@ def _verify_jaccard_candidates(
     ``pin_result=False`` skips the tail checkpoint for callers that
     immediately re-materialize the pairs themselves (the cluster
     builder eagerly checkpoints its symmetrized edge list) — a
-    second pin there is pure overhead.
-
-    When the caller passes the (pinned) per-block ``gram_df`` it
-    already computed plus ``block_cols``, the verifier measures the
-    largest block vocabulary and — when it fits
-    ``_BITMAP_VOCAB_CAP`` — verifies over per-document gram BITMAPS
-    instead of hash arrays (:func:`_verify_jaccard_candidates_bitmap`;
-    identical values, ~2 orders of magnitude less per-pair work on
-    small-vocabulary corpora). Large-vocabulary corpora keep the
-    array path: a bitmap would be ``vocab/8`` bytes per document
-    there, far wider than the gram array itself."""
+    second pin there is pure overhead."""
     from big_data_processing_spark.partitioning import spread_even
 
-    if gram_df is not None and block_cols:
-        vocab = _max_block_vocab(gram_df, block_cols)
-        if 0 < vocab <= _BITMAP_VOCAB_CAP:
-            bits = _bitmap_doc_frame(
-                base, block_cols, id_col,
-                _block_gram_dicts(gram_df, block_cols),
-                (vocab + 63) // 64,
-            )
-            return _verify_jaccard_candidates_bitmap(
-                bits, cand, id_col, threshold, pin_result=pin_result
-            )
+    if bits is None:
+        bits = _gram_bitmaps(base, id_col, gram_df, block_cols)
+    if bits is not None:
+        sets = bits.select(
+            F.col(id_col), "__sz", F.col("__bits").alias("__set")
+        )
 
-    arrs_a = base.select(
-        F.col(id_col).alias("id_a"), F.col("grams").alias("__ga")
-    )
-    arrs_b = base.select(
-        F.col(id_col).alias("id_b"), F.col("grams").alias("__gb")
-    )
+        def inter(a, b):
+            return F.aggregate(
+                F.zip_with(
+                    a, b,
+                    lambda x, y: F.bit_count(x.bitwiseAND(y)).cast("long"),
+                ),
+                F.lit(0).cast("long"),
+                lambda s, v: s + v,
+            )
+    else:
+        sets = base.select(
+            F.col(id_col), F.size("grams").alias("__sz"),
+            F.col("grams").alias("__set"),
+        )
+
+        def inter(a, b):
+            return F.size(F.array_intersect(a, b))
+
+    def side(s: str) -> DataFrame:
+        return sets.select(
+            F.col(id_col).alias(f"id_{s}"),
+            F.col("__sz").alias(f"sz_{s}"),
+            F.col("__set").alias(f"__set_{s}"),
+        )
+
     verified = (
         spread_even(cand)
-        .join(arrs_a, on="id_a")
-        .join(arrs_b, on="id_b")
+        .join(side("a"), on="id_a")
+        .join(side("b"), on="id_b")
         .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__ga", "__gb")).alias("inter"),
-            F.size("__ga").alias("sz_a"),
-            F.size("__gb").alias("sz_b"),
+            "id_a", "id_b",
+            inter(F.col("__set_a"), F.col("__set_b")).alias("inter"),
+            "sz_a", "sz_b",
         )
     )
-    union = F.col("sz_a") + F.col("sz_b") - F.col("inter")
-    jac = F.when(
-        union > 0, F.col("inter").cast("double") / union
-    ).otherwise(F.lit(0.0))
-    out = (
-        verified.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
-    )
+    out = _jaccard_at_least(verified, threshold)
     return out.localCheckpoint(eager=False) if pin_result else out
 
 
@@ -905,8 +857,10 @@ def jaccard_prefix_filter_pairs(
     :func:`ngram_jaccard_pairs`, no pair is ever missed: if
     J(A,B) >= t then |A∩B| >= ceil(t*|A|), so by pigeonhole A and B
     must share a gram inside both prefixes under ANY shared total
-    order. Candidates are then verified exactly on the full arrays
+    order. Candidates are then verified exactly on the full gram sets
     (same verifier as the max_df path), so precision is exact too.
+    This is :func:`similarity_join` with its plan fixed to the prefix
+    filter (``auto=False``).
 
     Scale posture: candidate work is Σ_gram prefix-df(gram)² — the
     canonical order puts each set's RAREST grams in its prefix, so
@@ -927,38 +881,9 @@ def jaccard_prefix_filter_pairs(
     same epsilon in the safe direction. Both only ever ADMIT more
     candidates — the exact verifier keeps the result set identical.
     """
-    if not 0.0 < threshold <= 1.0:
-        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    base = (
-        _spread(
-            df.select(
-                F.col(id_col), *[F.col(c) for c in block_cols],
-                F.col(text_col),
-            ),
-            id_col,
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            char_ngram_hashes_of_norm(
-                normalize_text(F.col(text_col)), n
-            ).alias("grams"),
-        )
-        # referenced 3× below (prefix build + both verify sides)
-        .localCheckpoint(eager=False)
-    )
-    gram_df = (
-        base.select(*block_cols, F.explode("grams").alias("g"))
-        .groupBy(*block_cols, "g")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .localCheckpoint(eager=False)
-    )
-    cand = _prefix_filter_candidates(
-        base, block_cols, id_col, threshold, gram_df=gram_df
-    )
-    return _verify_jaccard_candidates(
-        base, cand, id_col, threshold, pin_result=pin_result,
-        gram_df=gram_df, block_cols=block_cols,
+    return similarity_join(
+        df, text_col, id_col, block_cols, n=n, threshold=threshold,
+        auto=False, pin_result=pin_result,
     )
 
 
@@ -978,18 +903,14 @@ def _prefix_filter_candidates(
     the adaptive dispatch estimates its cost from the same gram-df
     statistics this generator keys on. ``base`` is the
     (*block_cols, id, grams) frame the caller checkpointed."""
-    exploded = base.select(
-        *block_cols, F.col(id_col), F.explode("grams").alias("g")
-    )
+    exploded = _gram_rows(base, block_cols, id_col)
     # canonical per-block total order: (document frequency asc, gram
     # asc). Any one shared order is correct; rarity-first makes the
     # prefix the least-collisional slice of each set. A caller that
     # already aggregated the gram table (the adaptive dispatch)
     # passes it in so the agg runs once per query, not per stage.
     if gram_df is None:
-        gram_df = exploded.groupBy(*block_cols, "g").agg(
-            F.count(F.lit(1)).alias("__df")
-        )
+        gram_df = _gram_df(base, block_cols)
     req_overlap = F.ceil(
         F.lit(threshold) * F.size("__sorted") - F.lit(1e-6)
     )
@@ -1121,13 +1042,7 @@ def choose_similarity_plan(
         base.agg(F.sum(slots_expr).alias("s")).collect()[0]["s"] or 0
     )
     if gram_df is None:
-        gram_df = (
-            base.select(
-                *block_cols, F.explode("grams").alias("g")
-            )
-            .groupBy(*block_cols, "g")
-            .agg(F.count(F.lit(1)).alias("__df"))
-        )
+        gram_df = _gram_df(base, block_cols)
 
     def pair_work(c):
         # c·(c−1) is even, so the shift is exact integer division —
@@ -1198,7 +1113,7 @@ def similarity_join(
       (pairs sharing ONLY >max_df ubiquitous grams are missed,
       the stop-word-dropping standard).
 
-    Both verify candidates exactly on the full gram arrays, so
+    Both verify candidates exactly on the full gram sets, so
     precision is always exact; the dispatch trades the recall valve
     against candidate-work blowup per corpus shape. ``auto=False``
     keeps the prefix plan unconditionally (full recall, cost be
@@ -1206,49 +1121,24 @@ def similarity_join(
     stage (gram explode + df count), so at 100 TB it costs one
     extra linear pass + a vocab-sized sort — noise against the
     candidate join it sizes."""
-    if not auto:
-        return jaccard_prefix_filter_pairs(
-            df, text_col, id_col, block_cols, n=n, threshold=threshold,
-            pin_result=pin_result,
-        )
-    base = (
-        _spread(
-            df.select(
-                F.col(id_col), *[F.col(c) for c in block_cols],
-                F.col(text_col),
-            ),
-            id_col,
-        )
-        .select(
-            F.col(id_col),
-            *[F.col(c) for c in block_cols],
-            char_ngram_hashes_of_norm(
-                normalize_text(F.col(text_col)), n
-            ).alias("grams"),
-        )
-        .localCheckpoint(eager=False)
+    if not auto and not 0.0 < threshold <= 1.0:
+        raise ValueError(f"threshold must be in (0, 1], got {threshold}")
+    # referenced by the planning statistics, the candidate generator
+    # and both verify sides
+    base = _shingle_frame(df, text_col, id_col, n, block_cols).localCheckpoint(
+        eager=False
     )
     # one gram-df aggregate serves planning AND whichever generator
     # wins — vocab-sized, so the checkpoint is cheap to hold
-    exploded = base.select(
-        *block_cols, F.col(id_col), F.explode("grams").alias("g")
-    )
-    gram_df = (
-        exploded.groupBy(*block_cols, "g")
-        .agg(F.count(F.lit(1)).alias("__df"))
-        .localCheckpoint(eager=False)
-    )
-    decision = choose_similarity_plan(
+    gram_df = _gram_df(base, block_cols).localCheckpoint(eager=False)
+    if auto and choose_similarity_plan(
         base, block_cols, id_col, threshold, max_df, cost_ratio,
         gram_df=gram_df,
-    )
-    if decision["plan"] == "prefix":
+    )["plan"] == "capped":
+        cand = _capped_candidates(base, block_cols, id_col, max_df, gram_df)
+    else:
         cand = _prefix_filter_candidates(
             base, block_cols, id_col, threshold, gram_df=gram_df
-        )
-    else:
-        cand = _capped_candidates(
-            exploded, block_cols, id_col, max_df, gram_df=gram_df
         )
     return _verify_jaccard_candidates(
         base, cand, id_col, threshold, pin_result=pin_result,
@@ -1257,25 +1147,23 @@ def similarity_join(
 
 
 def _capped_candidates(
-    exploded: DataFrame,
+    base: DataFrame,
     block_cols: list[str],
     id_col: str,
     max_df: int,
-    gram_df: DataFrame | None = None,
+    gram_df: DataFrame,
 ) -> DataFrame:
-    """df-capped inverted-index candidate pairs over an exploded
-    (*block_cols, id, g) gram table: pairs are generated only from
-    grams with block-local document frequency ≤ max_df, bounding
+    """df-capped inverted-index candidate pairs over a shingle frame:
+    pairs are generated only from grams with block-local document
+    frequency ≤ max_df (``gram_df``, :func:`_gram_df`), bounding
     candidate work at max_df × corpus grams (linear). Shared by
     :func:`ngram_jaccard_pairs` and :func:`similarity_join`."""
-    if gram_df is None:
-        gram_df = exploded.groupBy(*block_cols, "g").agg(
-            F.count(F.lit(1)).alias("__df")
-        )
     rare_grams = gram_df.filter(F.col("__df") <= max_df).select(
         *block_cols, "g"
     )
-    rare = exploded.join(rare_grams, on=[*block_cols, "g"])
+    rare = _gram_rows(base, block_cols, id_col).join(
+        rare_grams, on=[*block_cols, "g"]
+    )
     # NB: an explicit keyed repartition of `rare` on the join key
     # (to defeat AQE's byte-based coalescing of the CPU-dense pair
     # generation — it runs on ~5 of 32 tasks at sf0.1) was tried and
@@ -1306,27 +1194,11 @@ def md5_gram_sets(
     cross-engine string basis used by the md5 audit twins; docs with
     no shingles drop out (no near-dup semantics). Public so callers
     can materialize the frame ONCE and feed it to both the
-    signature build and the exact-Jaccard verification joins (see
-    plans/doc_clusters.md5_minhash_frames).
-
-    The no-shingle drop is expressed as ``length(nrm) >= n`` BEFORE
-    the shingling projection, not ``size(grams) > 0`` after it —
-    the two are equivalent (the shingle count is
-    ``max(length - (n-1), 0)``), but Catalyst pushes a post-hoc
-    size() filter below both projections, substituting the whole
-    gram pipeline into the predicate with ``normalize_text``
-    re-inlined into the per-ELEMENT substr lambda: one regex per
-    shingle instead of per row, measured 15.7 s vs 0.8 s at sf0.1.
-    The cheap length predicate instead pushes harmlessly to the
-    scan and prunes empty docs before the spread shuffle."""
-    return (
-        _spread(df.select(F.col(id_col), F.col(text_col)), id_col)
-        .select(F.col(id_col), normalize_text(F.col(text_col)).alias("nrm"))
-        .filter(F.length("nrm") >= shingle_n)
-        .select(
-            F.col(id_col),
-            char_ngrams_of_norm(F.col("nrm"), shingle_n).alias("grams"),
-        )
+    signature build and the exact-Jaccard verification (see
+    plans/doc_clusters.md5_minhash_frames)."""
+    return _shingle_frame(
+        df, text_col, id_col, shingle_n, grams_of=char_ngrams_of_norm,
+        drop_empty=True,
     )
 
 
@@ -1334,39 +1206,10 @@ def md5_minhash_signatures(
     grams: DataFrame, id_col: str, num_perm: int = 16
 ) -> DataFrame:
     """(id, m0..m{k-1}) md5-basis MinHash signatures from a
-    :func:`md5_gram_sets` frame, computed entirely per-row:
-    component i is ``array_min(transform(grams, g -> md5('i:'||g)))``
-    — a narrow map over each doc's gram array with ZERO shuffles.
-
-    An earlier formulation hashed each distinct gram once
-    (explode → distinct → per-vocab md5 → join back → groupBy min)
-    on the theory that instances ≫ vocab makes vocab hashing
-    cheaper. Measured at sf0.1 it is the opposite: the three
-    instance-scale shuffles (distinct, join, groupBy) dominate the
-    saved md5 calls — 9.9 s vs 1.0 s for this per-row build, with
-    bit-identical output (md5 is deterministic per (i, gram), and
-    min-over-array equals min-over-group on a distinct gram set).
-    At 100 TB the gap widens: this build is embarrassingly
-    parallel over doc rows while the old one shuffled every gram
-    instance by value.
-
-    NB the lambda arity trap: ``F.transform`` passes (element,
-    index) to any two-argument callable, so ``lambda g, i=i: ...``
-    silently receives the ARRAY INDEX as ``i`` — the permutation
-    id must be bound via an outer closure, as here."""
-
-    def perm(i: int):
-        return lambda g: F.md5(F.concat_ws(":", F.lit(str(i)), g))
-
-    return grams.select(
-        F.col(id_col),
-        *[
-            F.array_min(F.transform(F.col("grams"), perm(i))).alias(
-                f"m{i}"
-            )
-            for i in range(num_perm)
-        ],
-    )
+    :func:`md5_gram_sets` frame: component i is
+    ``array_min(transform(grams, g -> md5('i:'||g)))``, the
+    lexicographic minimum of the hex strings."""
+    return _minhash_signatures(grams, id_col, num_perm, _md5_perm)
 
 
 def minhash_near_duplicates_md5(
@@ -1381,111 +1224,29 @@ def minhash_near_duplicates_md5(
     sig: DataFrame | None = None,
     bits: DataFrame | None = None,
 ) -> DataFrame:
-    """MinHash+LSH near-dup pairs on a CROSS-ENGINE hash basis:
-    permutation i of a gram is md5("i:" || gram), and the signature
-    component is the lexicographic MIN of those hex strings — md5 is
-    identical in every engine, so the whole pipeline (signatures →
-    band buckets → candidates → exact string-gram Jaccard) is
-    reproducible bit-for-bit in plain SQL, unlike the xxhash64 fast
-    path (:func:`minhash_near_duplicates`), whose basis is
-    engine-specific. This is the auditable twin: same banding
-    structure, same candidate semantics, same exact verification —
-    a green value-check here certifies the LSH logic the fast
-    variant shares.
+    """MinHash+LSH near-dup pairs on the CROSS-ENGINE md5 basis: the
+    same shingle → signature → band → verify pipeline as
+    :func:`minhash_near_duplicates`, with string grams,
+    ``md5("i:" || gram)`` permutations and md5 band buckets. md5 is
+    identical in every engine, so the whole pipeline reproduces
+    bit-for-bit in plain SQL: a green value-check of this auditable
+    twin certifies the stages the engine-specific fast path shares.
+    Production dedup at 100 TB should run the xxhash64 variant —
+    this one costs ~num_perm md5 calls per (doc, gram).
 
-    Costs ~num_perm md5 calls per (doc, gram) and shuffles string
-    grams at verification, so production dedup at 100 TB should run
-    the xxhash64 variant; this one exists for audits and parity
-    gates. Same scale shape otherwise: band-bucket equi-join on ids,
-    never documents.
-
-    ``grams`` / ``sig`` accept pre-built (ideally materialized)
-    frames from :func:`md5_gram_sets` / :func:`md5_minhash_signatures`:
-    without them the lazy gram pipeline re-executes up to 4× (band
-    self-join references sig twice; the two verification joins
-    reference grams twice more) — the r6 bench read 15.7 s at sf0.1
-    for exactly that reason. With localCheckpointed frames
-    (plans/doc_clusters.md5_minhash_frames) each pipeline runs once.
-
-    ``bits`` accepts a pre-built, session-memoized (id, __sz,
-    __bits) gram-bitmap frame (:func:`_bitmap_doc_frame` over the
-    SAME grams — see plans.doc_clusters.md5_gram_bits): candidates
-    are then verified by popcount-of-AND instead of
-    ``array_intersect`` over the ~1000-string arrays, with
-    identical jaccard values. Deliberately NOT self-built here:
-    un-memoized, the vocab scalar + dictionary + bitmap build
-    re-run per invocation and cost more than they save."""
-    rows = num_perm // bands
+    ``grams`` / ``sig`` / ``bits`` accept pre-built, ideally
+    materialized frames (:func:`md5_gram_sets`,
+    :func:`md5_minhash_signatures`, ``plans.doc_clusters.md5_gram_bits``):
+    without them the lazy gram pipeline re-executes once per
+    reference (r6 bench: 15.7 s at sf0.1), with the memoized frames
+    of ``plans/doc_clusters.md5_minhash_frames`` each runs once."""
     if grams is None:
         grams = md5_gram_sets(df, text_col, id_col, shingle_n)
     if sig is None:
         sig = md5_minhash_signatures(grams, id_col, num_perm)
-
-    band_cols = [
-        F.struct(
-            F.lit(b).alias("band"),
-            F.md5(
-                F.concat_ws(
-                    ",",
-                    *[F.col(f"m{b * rows + r}") for r in range(rows)],
-                )
-            ).alias("bucket"),
-        )
-        for b in range(bands)
-    ]
-    banded = sig.select(
-        id_col, F.explode(F.array(*band_cols)).alias("bb")
-    ).select(id_col, "bb.band", "bb.bucket")
-
-    cand = (
-        banded.alias("a")
-        .join(banded.alias("b"), on=["band", "bucket"])
-        .select(
-            F.col(f"a.{id_col}").alias("id_a"),
-            F.col(f"b.{id_col}").alias("id_b"),
-        )
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
-
-    if bits is not None:
-        return _verify_jaccard_candidates_bitmap(
-            bits, cand, id_col, threshold, pin_result=False
-        )
-
-    from big_data_processing_spark.partitioning import spread_even
-
-    pairs = (
-        # keyless spread — same verify-width rationale as
-        # minhash_near_duplicates / _verify_jaccard_candidates
-        spread_even(cand)
-        .join(
-            grams.select(
-                F.col(id_col).alias("id_a"), F.col("grams").alias("__ga")
-            ),
-            on="id_a",
-        )
-        .join(
-            grams.select(
-                F.col(id_col).alias("id_b"), F.col("grams").alias("__gb")
-            ),
-            on="id_b",
-        )
-        .select(
-            "id_a",
-            "id_b",
-            F.size(F.array_intersect("__ga", "__gb")).alias("__i"),
-            F.size("__ga").alias("__sa"),
-            F.size("__gb").alias("__sb"),
-        )
-    )
-    jac = F.col("__i").cast("double") / (
-        F.col("__sa") + F.col("__sb") - F.col("__i")
-    )
-    return (
-        pairs.withColumn("jaccard", F.round(jac, 6))
-        .filter(F.col("jaccard") >= threshold)
-        .select("id_a", "id_b", "jaccard")
+    cand = _lsh_candidates(sig, id_col, num_perm, bands, F.md5)
+    return _verify_jaccard_candidates(
+        grams, cand, id_col, threshold, pin_result=False, bits=bits
     )
 
 
@@ -1496,22 +1257,18 @@ def simhash_near_duplicates_md5(
     max_hamming: int = 3,
 ) -> DataFrame:
     """SimHash near-dup pairs on a CROSS-ENGINE hash basis: each
-    token's 32-bit hash is the first 8 hex chars of md5(token), so
-    the whole pipeline — bit votes → 32-bit simhash → 8-bit-chunk
-    banding → ``bit_count(xor) <= max_hamming`` verification — is
-    reproducible bit-for-bit in plain SQL. The auditable twin of
-    :func:`simhash_near_duplicates` (engine-specific xxhash64, 64
-    bits): same vote semantics (token multiplicity counts, ties
-    clear the bit), same pigeonhole banding structure (4 chunks
-    guarantee recall for hamming ≤ 3), same verification — a green
-    value-check here certifies the banding/vote logic the fast
-    variant shares.
+    token's 32-bit hash is the first 8 hex chars of md5(token), and
+    the votes, the ``max_hamming + 1`` chunk banding and the
+    ``bit_count(xor) <= max_hamming`` verification are the shared
+    stages of :func:`simhash_near_duplicates` at width 32 — so the
+    whole pipeline reproduces bit-for-bit in plain SQL, and a green
+    value-check of this auditable twin certifies them. ``hamming``
+    is ``bigint``, as the audit oracle computes it.
 
     Costs one md5 per DISTINCT token (vocab-hashed once, joined
     back) and a 32× bit explode, so production dedup should run the
     64-bit xxhash64 variant; this exists for audits and parity
-    gates. Scale shape is identical: chunk-bucket equi-join on
-    (id, simhash) only, never text."""
+    gates."""
     toks = _spread(df.select(F.col(id_col), F.col(text_col)), id_col).select(
         F.col(id_col), F.explode(tokens(F.col(text_col))).alias("t")
     )
@@ -1523,53 +1280,9 @@ def simhash_near_duplicates_md5(
         .cast("long")
         .alias("h"),
     )
-    hashed = toks.join(vocab, "t").select(id_col, "h")
-    bits = hashed.select(
-        F.col(id_col),
-        F.explode(F.sequence(F.lit(0), F.lit(31))).alias("bit"),
-        "h",
-    ).select(
-        id_col,
-        "bit",
-        F.expr("(shiftright(h, bit) & 1) * 2 - 1").alias("v"),
-    )
-    votes = bits.groupBy(id_col, "bit").agg(F.sum("v").alias("vs"))
-    sim_table = votes.groupBy(id_col).agg(
-        F.sum(
-            F.when(F.col("vs") > 0, F.expr("shiftleft(1L, bit)")).otherwise(
-                F.lit(0).cast("long")
-            )
-        ).alias("sh")
-    )
-    # chunk self-join references sim on both sides — materialize once
-    # (same checkpoint guard as simhash_near_duplicates)
-    sim = _spread(sim_table, id_col).localCheckpoint(eager=False)
-    chunks = F.array(*[
-        F.struct(
-            F.lit(c).alias("chunk"),
-            F.expr(f"shiftright(sh, {8 * c}) & 255").alias("key"),
-        )
-        for c in range(4)
-    ])
-    banded = sim.select(
-        id_col, "sh", F.explode(chunks).alias("cc")
-    ).select(id_col, "sh", "cc.chunk", "cc.key")
-    left = banded.select(
-        F.col(id_col).alias("id_a"), F.col("sh").alias("h_a"),
-        "chunk", "key",
-    )
-    right = banded.select(
-        F.col(id_col).alias("id_b"), F.col("sh").alias("h_b"),
-        "chunk", "key",
-    )
-    hamming = F.bit_count(F.col("h_a").bitwiseXOR(F.col("h_b")))
-    return (
-        left.join(right, on=["chunk", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-        .withColumn("hamming", hamming.cast("bigint"))
-        .filter(F.col("hamming") <= max_hamming)
-        .select("id_a", "id_b", "hamming")
+    sim = _simhash_table(toks.join(vocab, "t").select(id_col, "h"), id_col, 32)
+    return _simhash_pairs(sim, id_col, max_hamming, 32).withColumn(
+        "hamming", F.col("hamming").cast("bigint")
     )
 
 

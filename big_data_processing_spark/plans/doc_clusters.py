@@ -214,11 +214,7 @@ def md5_gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     over the bitmap is ~30× less work with identical jaccard
     values). Returns ``None`` when the corpus vocabulary exceeds the
     bitmap cap — callers then keep the array path."""
-    from big_data_processing_spark.functions.dedup import (
-        _BITMAP_VOCAB_CAP,
-        _bitmap_doc_frame,
-        _block_gram_dicts,
-    )
+    from big_data_processing_spark.functions.dedup import _gram_bitmaps
 
     base = (
         spark.sparkContext.applicationId,
@@ -231,19 +227,11 @@ def md5_gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     if bkey in _CACHE:
         return _CACHE[bkey]
     grams, _sig = md5_minhash_frames(spark, sf_dir)
-    vocab_src = (
-        grams.select(F.explode("grams").alias("g"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    vocab = vocab_src.count()
-    if not 0 < vocab <= _BITMAP_VOCAB_CAP:
-        _CACHE[bkey] = None  # memoize the decision too (scalar job)
-        return None
-    bits = _bitmap_doc_frame(
-        grams, [], "doc_id", _block_gram_dicts(vocab_src, []),
-        (vocab + 63) // 64,
-    )
-    bits.count()  # materialize the builder's own lazy checkpoint now
+    # the decision is memoized too (None: the vocabulary scalar job
+    # runs once per key)
+    bits = _gram_bitmaps(grams, "doc_id")
+    if bits is not None:
+        # one scan of the bitmaps _bitmap_doc_frame already pinned
+        bits.count()
     _CACHE[bkey] = bits
     return bits

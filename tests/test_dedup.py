@@ -124,6 +124,53 @@ def test_simhash_md5_basis_is_engine_reproducible(docs):
            simhash_near_duplicates_md5(docs, "text", "doc_id").collect()}
     assert got == expect
 
+def test_simhash_md5_any_threshold_matches_brute_force(spark):
+    """The md5 twin bands with max_hamming + 1 chunks, so at
+    max_hamming=5 it must return EXACTLY the brute-force pair set —
+    including pairs whose differing bits touch all four 8-bit
+    quarters, which a fixed 4 x 8-bit split silently missed."""
+    import hashlib
+    import itertools
+
+    from big_data_processing_spark.functions.dedup import (
+        simhash_near_duplicates_md5,
+    )
+
+    texts = {i: f"near duplicate detection x{i} y{i}" for i in range(40)}
+
+    def sim32(text):
+        votes = [0] * 32
+        for t in text.split():
+            h = int(hashlib.md5(t.encode()).hexdigest()[:8], 16)
+            for b in range(32):
+                votes[b] += 1 if (h >> b) & 1 else -1
+        return sum(1 << b for b in range(32) if votes[b] > 0)
+
+    sims = {i: sim32(t) for i, t in texts.items()}
+    expect = {}
+    missed_by_fixed_chunks = 0
+    for a, b in itertools.combinations(sorted(sims), 2):
+        ham = bin(sims[a] ^ sims[b]).count("1")
+        if ham <= 5:
+            expect[(a, b)] = ham
+            missed_by_fixed_chunks += not any(
+                (sims[a] >> (8 * c)) & 255 == (sims[b] >> (8 * c)) & 255
+                for c in range(4)
+            )
+    assert missed_by_fixed_chunks > 0  # the corpus exercises the bug
+
+    df = spark.createDataFrame(
+        list(texts.items()), "doc_id long, text string"
+    )
+    got = {
+        (r.id_a, r.id_b): r.hamming
+        for r in simhash_near_duplicates_md5(
+            df, "text", "doc_id", max_hamming=5
+        ).collect()
+    }
+    assert got == expect
+
+
 def test_ngram_jaccard_pairs_with_blocking(spark):
     df = spark.createDataFrame(
         [(1, DOC_A, "en"), (2, DOC_A2, "en"), (3, DOC_B, "en"),
@@ -178,10 +225,13 @@ def test_ngram_jaccard_max_df_subset_and_exact_values(spark):
 def test_bitmap_verify_identical_to_array_verify(spark, monkeypatch):
     """The bitmap exact verifier must return the SAME pair set and
     values as the array verifier — same candidates, same distinct-
-    gram-hash sets, only the set representation differs. Pin both
-    directions: default dispatch picks bitmaps on this tiny-vocab
-    corpus (bit_count visible in the plan), and a zeroed vocab cap
-    forces the array path, with identical output."""
+    gram sets, only the set representation differs. Pinned for every
+    caller of the shared verifier: the n-gram family (per-block
+    vocabulary), the MinHash fast path and the md5 twin with and
+    without memo-style bitmaps (global vocabulary). Default dispatch
+    picks bitmaps on this tiny-vocab corpus (bit_count visible in the
+    plan), and a zeroed vocab cap forces the array path, with
+    identical output."""
     import big_data_processing_spark.functions.dedup as dd
     from big_data_processing_spark.sources.catalog import load_table
 
@@ -189,25 +239,43 @@ def test_bitmap_verify_identical_to_array_verify(spark, monkeypatch):
         "doc_id", "lang", "text"
     )
 
-    def run():
-        return dd.ngram_jaccard_pairs(
-            docs, "text", "doc_id", ["lang"], n=3, threshold=0.3,
-            max_df=50, pin_result=False,
+    def md5_with_bits():
+        grams = dd.md5_gram_sets(docs, "text", "doc_id").localCheckpoint()
+        return dd.minhash_near_duplicates_md5(
+            docs, "text", "doc_id", threshold=0.3, grams=grams,
+            bits=dd._gram_bitmaps(grams, "doc_id"),
         )
 
-    bitmap_df = run()
-    plan = bitmap_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "bit_count" in plan  # dispatch chose the bitmap verifier
-    bitmap = {(r.id_a, r.id_b): r.jaccard for r in bitmap_df.collect()}
+    cases = {
+        "ngram": lambda: dd.ngram_jaccard_pairs(
+            docs, "text", "doc_id", ["lang"], n=3, threshold=0.3,
+            max_df=50, pin_result=False,
+        ),
+        "minhash": lambda: dd.minhash_near_duplicates(
+            docs, "text", "doc_id", threshold=0.3, pin_result=False
+        ),
+        "md5": lambda: dd.minhash_near_duplicates_md5(
+            docs, "text", "doc_id", threshold=0.3
+        ),
+        "md5_bits": md5_with_bits,
+    }
 
+    def run(case):
+        df = case()
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        return "bit_count" in plan, {
+            (r.id_a, r.id_b): r.jaccard for r in df.collect()
+        }
+
+    bitmap = {name: run(case) for name, case in cases.items()}
     monkeypatch.setattr(dd, "_BITMAP_VOCAB_CAP", 0)
-    array_df = run()
-    plan = array_df._jdf.queryExecution().optimizedPlan().toString()
-    assert "bit_count" not in plan  # cap 0 forces the array verifier
-    arr = {(r.id_a, r.id_b): r.jaccard for r in array_df.collect()}
+    arr = {name: run(case) for name, case in cases.items()}
 
-    assert bitmap == arr
-    assert len(bitmap) > 0
+    for name in cases:
+        assert bitmap[name][0], name  # dispatch chose the bitmap verifier
+        assert not arr[name][0], name  # cap 0 forces the array verifier
+        assert bitmap[name][1] == arr[name][1], name
+        assert len(bitmap[name][1]) > 0, name
 
 
 def test_prefix_filter_identical_to_exact_inverted_index(spark):

@@ -1059,7 +1059,8 @@ def test_hash64_near_dup_pairs_any_threshold(spark):
     one flipped bit in each of the old 4 fixed 16-bit chunks (the
     documented silent-false-negative case) MUST appear at
     max_hamming=4; max_hamming=0 degenerates to an exact-equality
-    join; out-of-range thresholds raise."""
+    join; out-of-range thresholds raise. The same holds at the
+    32-bit width of the md5 SimHash twin."""
     import pytest as _pytest
 
     from big_data_processing_spark.functions.dedup import (
@@ -1088,6 +1089,28 @@ def test_hash64_near_dup_pairs_any_threshold(spark):
     for bad in (-1, 64):
         with _pytest.raises(ValueError):
             hash64_near_dup_pairs(df, "id", "h", bad)
+
+    # width 32 (the md5 SimHash twin): one flipped bit in each 8-bit
+    # quarter defeats a fixed 4 x 8-bit split, never the derived one
+    base32 = 0x0F0F0F0F
+    rows32 = [
+        (1, base32),
+        (2, base32 ^ (1 << 4) ^ (1 << 12) ^ (1 << 20) ^ (1 << 28)),
+        (3, base32),
+    ]
+    df32 = spark.createDataFrame(rows32, "id long, h long")
+    got32 = {
+        (r.id_a, r.id_b): r.hamming
+        for r in hash64_near_dup_pairs(df32, "id", "h", 4, width=32).collect()
+    }
+    assert got32 == {(1, 2): 4, (2, 3): 4, (1, 3): 0}
+    got32_0 = {
+        (r.id_a, r.id_b)
+        for r in hash64_near_dup_pairs(df32, "id", "h", 0, width=32).collect()
+    }
+    assert got32_0 == {(1, 3)}
+    with _pytest.raises(ValueError):
+        hash64_near_dup_pairs(df32, "id", "h", 32, width=32)
 
 
 def test_audio_fingerprint_contract():

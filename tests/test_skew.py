@@ -26,8 +26,11 @@ from big_data_processing_spark.operators.joins import salted_join
 
 def _skewed_pair(spark, n_left=200_000, n_right=500):
     """Left fact with ~20% of rows on key 1; small-but-unbroadcast
-    right side keyed 0..n_right-1."""
-    left = spark.range(n_left).select(
+    right side keyed 0..n_right-1. The left side has a fixed 32 map
+    splits: ``spark.range(n)`` makes one per core, and with 4 or 8
+    splits the hot reduce partition never crossed the skew bar, so
+    whether AQE split it depended on the core count."""
+    left = spark.range(0, n_left, 1, 32).select(
         F.when(F.col("id") % 5 == 0, F.lit(1))
         .otherwise(F.col("id") % n_right)
         .alias("k"),
