@@ -1,25 +1,124 @@
-"""Deterministic media fixture generators for the registered codec
-queries (JPEG / progressive JPEG / WebP / lossy VP8 / GIF / MJPEG /
-audio fingerprint / recompress-audit rasters).
+"""Deterministic media fixtures for the registered codec queries,
+and :func:`fixture_media`, the one frame that turns a fixture into
+``(media_id long, content binary)`` rows on the executors.
 
-Why this module exists (r11 optimization, measured): these
-generators are referenced from worker-side kernels (mapInPandas
-closures). A function defined in a ``plans/*`` module pickles BY
-REFERENCE, and unpickling it in a Python worker imports its module
-— which, through ``plans/__init__`` -> registry ``_load_all()``,
-executes EVERY registration INCLUDING the driver-side oracle-value
-computations (WebP encodes, pHash decodes, ...): ~2.4 s of import
-per fresh worker, dominating the codec queries' stage time (e.g.
-gif_frame_features: 23 s executorRunTime, 0.3 s JVM CPU, ~1 ms of
-actual codec work per GIF). Defined here — a leaf module under the
-import-light ``functions`` package — a worker unpickle imports only
-this file and the codec kernels it calls.
+The by-reference pickling rule. Spark ships a ``mapInPandas``
+function to its Python workers with cloudpickle. A module-level
+function pickles BY REFERENCE, so unpickling it imports its module.
+A fixture or kernel that lives in a ``plans/*`` module therefore
+makes every fresh worker import the whole query registry
+(``plans/__init__`` -> ``registry._load_all()``), including the
+driver-side oracle-value computations (WebP encodes, pHash decodes,
+...): measured at ~2.4 s per worker, which dominated the codec
+queries' stage time (gif_frame_features: 23 s executorRunTime for
+~1 ms of codec work per GIF).
 
-The plans modules import these names back for their oracle-value
-computations; registration behavior is unchanged.
+:func:`fixture_media` keeps that crossing cheap in one place:
+
+- its batch function is nested, so it pickles by value;
+- it accepts only fixtures defined at module level here, which
+  pickle by reference to this leaf module, so a worker imports this
+  file and the codec modules the fixture calls, nothing more;
+- its pyspark and catalog imports stay inside the function body, so
+  a worker's import of this module stays light.
+
+The plans modules import the fixtures back for their oracle-value
+computations at registration.
 """
 
 from __future__ import annotations
+
+
+def fixture_media(spark, sf_dir: str, n_docs: int, fixture):
+    """``(media_id long, content binary)`` for every ``doc_id <
+    n_docs`` of the documents table, spread on doc_id, with
+    ``content = fixture(doc_id)`` computed executor-side.
+
+    ``fixture`` must be a module-level function of this module (see
+    the module docstring); anything else raises ``ValueError``."""
+    if getattr(fixture, "__module__", None) != __name__:
+        raise ValueError(
+            f"fixture {fixture!r} is not a function of {__name__}"
+        )
+    from pyspark.sql import functions as F
+
+    from big_data_processing_spark.partitioning import spread
+    from big_data_processing_spark.sources.catalog import load_table
+
+    ids = spread(
+        load_table(spark, sf_dir, "documents")
+        .select("doc_id")
+        .filter(F.col("doc_id") < n_docs),
+        "doc_id",
+    )
+
+    def gen(batches):
+        import pandas as pd
+
+        for pdf in batches:
+            yield pd.DataFrame(
+                {
+                    "media_id": pdf["doc_id"],
+                    "content": pdf["doc_id"].map(lambda i: fixture(int(i))),
+                }
+            )
+
+    return ids.mapInPandas(gen, schema="media_id long, content binary")
+
+
+def _image_mix_fixture(i: int) -> bytes:
+    """Mixed-format fixture by doc_id mod 5: P6 netpbm, RGB PNG,
+    palette PNG, 24-bit BMP, and a JPEG magic with a junk body that
+    no decoder accepts. Each format has distinct dims."""
+    from big_data_processing_spark.functions.multimodal import (
+        make_bmp,
+        make_png,
+        make_ppm,
+    )
+
+    f = i % 5
+    if f == 0:
+        return make_ppm(8, 6, seed=i)
+    if f == 1:
+        return make_png(9, 5, seed=i)
+    if f == 2:
+        return make_png(7, 5, seed=i, color_type=3)
+    if f == 3:
+        return make_bmp(6, 7, seed=i)
+    return b"\xff\xd8\xff\xe0" + bytes(12)  # JFIF magic, junk body
+
+
+def _png16_fixture(i: int) -> bytes:
+    """16-bit PNG by doc_id parity: 8x6 gray or 7x5 RGB."""
+    from big_data_processing_spark.functions.multimodal import make_png
+
+    if i % 2 == 0:
+        return make_png(8, 6, seed=i, color_type=0, depth=16)
+    return make_png(7, 5, seed=i, color_type=2, depth=16)
+
+
+def _png_interlaced_fixture(i: int) -> bytes:
+    """PNG by doc_id mod 4: Adam7 RGB8 (13x11, every pass non-empty),
+    Adam7 16-bit gray, Adam7 4-bit palette, and plain 2-bit gray."""
+    from big_data_processing_spark.functions.multimodal import make_png
+
+    f = i % 4
+    if f == 0:
+        return make_png(13, 11, seed=i, interlaced=True)
+    if f == 1:
+        return make_png(9, 7, seed=i, color_type=0, depth=16, interlaced=True)
+    if f == 2:
+        return make_png(9, 7, seed=i, color_type=3, depth=4, interlaced=True)
+    return make_png(8, 6, seed=i, color_type=0, depth=2)
+
+
+def _avi_fixture(i: int) -> bytes:
+    """Uncompressed 24-bit AVI: (8 + i mod 5) x (6 + i mod 3) pixels,
+    4 + i mod 3 frames."""
+    from big_data_processing_spark.functions.multimodal import make_avi
+
+    return make_avi(8 + i % 5, 6 + i % 3, 4 + i % 3, seed=i)
+
 
 def _jpeg_fixture(i: int) -> bytes:
     """Deterministic JPEG fixture mix keyed by doc_id — one variant
@@ -256,6 +355,8 @@ def _recompress_fixture(i: int) -> bytes:
     )
 
 
+# (width, height, q_index, filter_level) per doc_id mod 6: spans
+# quantizer decades, deblocking off/mid/max, odd dims, multi-MB grids
 _VP8_VARIANTS = (
     (16, 16, 12, 0),
     (32, 32, 40, 0),
@@ -285,6 +386,7 @@ def _vp8_lossy_fixture(i: int) -> bytes:
     return data
 
 
+# (w, h, n_frames, quality) per doc_id mod 4
 _MJPEG_VARIANTS = ((16, 16, 3, 90), (24, 16, 4, 75), (32, 24, 2, 95),
                    (20, 12, 3, 60))
 

@@ -1358,48 +1358,20 @@ def q_streaming_session_window_parity(
     "validation, stride/flip/channel-swap), then every SECOND frame "
     "is sampled to scalar features (sample_video_frames_real). The "
     "oracle regenerates each sampled frame's mean/checksum "
-    "arithmetically over the pixel grid. NotImplementedError "
-    "remains only for compressed fourccs (MJPG/H264 — no codec "
-    "libs), completing the real-media story: images, audio, video",
+    "arithmetically over the pixel grid. Compressed MJPG streams "
+    "decode too (video_frame_features_mjpeg); NotImplementedError "
+    "remains only for inter-frame codecs (H264/...)",
 )
 def q_video_frame_features(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from collections.abc import Iterator
-
-    import pandas as pd
-
+    from big_data_processing_spark.functions.fixtures import (
+        _avi_fixture,
+        fixture_media,
+    )
     from big_data_processing_spark.functions.multimodal import (
-        make_avi,
         sample_video_frames_real,
     )
-    from big_data_processing_spark.partitioning import spread
 
-    ids = spread(
-        load_table(spark, sf_dir, "documents")
-        .select("doc_id")
-        .filter(F.col("doc_id") < 48),
-        "doc_id",
-    )
-
-    def synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["doc_id"],
-                    "content": [
-                        bytearray(
-                            make_avi(
-                                8 + int(i) % 5,
-                                6 + int(i) % 3,
-                                4 + int(i) % 3,
-                                seed=int(i),
-                            )
-                        )
-                        for i in pdf["doc_id"]
-                    ],
-                }
-            )
-
-    media = ids.mapInPandas(synth, schema="media_id long, content binary")
+    media = fixture_media(spark, sf_dir, 48, _avi_fixture)
     # pinned before the sort: the orderBy's range partitioner
     # samples its child — unpinned, every AVI decodes TWICE
     out = sample_video_frames_real(media, every_n=2).localCheckpoint(

@@ -230,8 +230,5 @@ def md5_gram_bits(spark: SparkSession, sf_dir: str) -> DataFrame | None:
     # the decision is memoized too (None: the vocabulary scalar job
     # runs once per key)
     bits = _gram_bitmaps(grams, "doc_id")
-    if bits is not None:
-        # one scan of the bitmaps _bitmap_doc_frame already pinned
-        bits.count()
     _CACHE[bkey] = bits
     return bits

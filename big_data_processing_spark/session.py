@@ -33,6 +33,21 @@ def _default_master() -> str:
     return os.environ.get("SPARK_MASTER_URL", f"local[{cpus}]")
 
 
+def _default_driver_mem(meminfo: str = "/proc/meminfo") -> str:
+    """min(48g, half the host's MemTotal); 48g when ``meminfo`` is
+    unreadable. The 48g cap holds on hosts with 96 GB or more."""
+    try:
+        with open(meminfo) as f:
+            kb = next(
+                int(line.split()[1]) for line in f
+                if line.startswith("MemTotal:")
+            )
+    except (OSError, StopIteration, ValueError):
+        return "48g"
+    half_mb = kb // 2048
+    return "48g" if half_mb >= 48 * 1024 else f"{half_mb}m"
+
+
 def get_spark(
     app_name: str = DEFAULT_APP_NAME,
     master: str | None = None,
@@ -53,9 +68,13 @@ def get_spark(
     # local[N] runs driver and executors in ONE JVM: the default 1g
     # heap serves 32 task threads (measured OOM at sf1 on exact
     # percentile). Size the heap like the executor fleet it stands in
-    # for; harmless cap when idle. On a real cluster this knob moves
-    # to executor.memory via spark-submit.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
+    # for, but never past half the host's memory: a heap larger than
+    # the host gets the process killed instead of spilling. On a
+    # real cluster this knob moves to executor.memory via
+    # spark-submit.
+    driver_mem = (
+        os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
+    )
 
     builder = (
         SparkSession.builder.appName(app_name)

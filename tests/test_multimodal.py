@@ -1127,7 +1127,7 @@ def test_audio_fingerprint_contract():
         decode_wav,
         wav_from_samples,
     )
-    from big_data_processing_spark.plans.extension_queries import (
+    from big_data_processing_spark.functions.fixtures import (
         _afp_fixture,
         _afp_signal,
     )
@@ -1192,3 +1192,60 @@ def test_mjpeg_avi_closed_loop():
     bad = data.replace(b"MJPG", b"H264")
     with _pytest.raises(NotImplementedError):
         decode_avi(bad)
+
+
+def test_fixture_media_worker_function_skips_plans(spark, monkeypatch):
+    """The function fixture_media hands to mapInPandas must unpickle
+    in a fresh interpreter without importing any plans module: one
+    that did would load the whole query registry in every Python
+    worker. Only module-level fixtures of functions/fixtures.py are
+    accepted."""
+    import os
+    import pickle
+    import subprocess
+    import sys
+
+    from pyspark import cloudpickle
+
+    from big_data_processing_spark.functions.fixtures import (
+        _jpeg_fixture,
+        fixture_media,
+    )
+    from tests.conftest import SF0001
+
+    captured = []
+    monkeypatch.setattr(
+        type(spark.range(1)),  # the session's concrete DataFrame class
+        "mapInPandas",
+        lambda self, fn, schema: captured.append((fn, schema)),
+    )
+    fixture_media(spark, SF0001, 3, _jpeg_fixture)
+    (fn, schema), = captured
+    assert schema == "media_id long, content binary"
+
+    code = """
+import pickle, sys
+import pandas as pd
+fn = pickle.loads(sys.stdin.buffer.read())
+(out,) = fn(iter([pd.DataFrame({"doc_id": [0, 1, 2]})]))
+plans = sorted(
+    m for m in sys.modules if m.startswith("big_data_processing_spark.plans")
+)
+sys.stdout.buffer.write(pickle.dumps((out, plans)))
+"""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        input=cloudpickle.dumps(fn),
+        capture_output=True,
+        cwd=root,
+        env={**os.environ, "PYTHONPATH": root},
+        check=True,
+    )
+    out, plans = pickle.loads(proc.stdout)
+    assert plans == []
+    assert list(out["media_id"]) == [0, 1, 2]
+    assert list(out["content"]) == [_jpeg_fixture(i) for i in range(3)]
+
+    with pytest.raises(ValueError):
+        fixture_media(spark, SF0001, 3, lambda i: b"")

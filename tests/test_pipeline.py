@@ -31,3 +31,19 @@ def test_pipeline_schema_gate_fails_on_wrong_table(spark, tmp_path):
 
     with pytest.raises(ValueError, match="schema gate"):
         run_pipeline(spark, SF0001, str(tmp_path / "x"), table="region")
+
+
+def test_default_driver_mem_sized_from_host(tmp_path):
+    """The default driver heap is min(48g, half of MemTotal), and 48g
+    when the meminfo file cannot be read."""
+    from big_data_processing_spark.session import _default_driver_mem
+
+    def meminfo(kb):
+        p = tmp_path / f"meminfo-{kb}"
+        p.write_text(f"MemTotal:       {kb} kB\nMemFree:  1 kB\n")
+        return str(p)
+
+    assert _default_driver_mem(meminfo(16 * 1024 * 1024)) == "8192m"
+    assert _default_driver_mem(meminfo(96 * 1024 * 1024)) == "48g"
+    assert _default_driver_mem(meminfo(512 * 1024 * 1024)) == "48g"
+    assert _default_driver_mem(str(tmp_path / "missing")) == "48g"
