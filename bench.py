@@ -46,6 +46,22 @@ def force(df) -> int:
         return df.count()
 
 
+def _previous_line_names() -> set[str]:
+    """Query names of the last committed bench line: the
+    ``parsed.queries`` keys of the highest-numbered BENCH_r<NN>.json
+    next to this file (empty when there is none)."""
+    here = os.path.dirname(os.path.abspath(__file__))
+    rounds = [
+        (int(m.group(1)), name)
+        for name in os.listdir(here)
+        if (m := re.fullmatch(r"BENCH_r(\d+)\.json", name))
+    ]
+    if not rounds:
+        return set()
+    with open(os.path.join(here, max(rounds)[1])) as fh:
+        return set(json.load(fh)["parsed"]["queries"])
+
+
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     m = re.search(r"sf([0-9.]+)", sf_dir)
@@ -276,7 +292,8 @@ def main() -> None:
     budget = 1400
 
     # Names printed in the previous round's committed one-line JSON
-    # (BENCH_r11.json). The cheapest-first eviction below made the
+    # (the highest-numbered BENCH_r<NN>.json; the _c8 files are the
+    # 8-core width runs). The cheapest-first eviction below made the
     # printed set depend on the current round's timings, so every
     # optimization round scrambled the driver's round-over-round
     # window: 10 now-fast queries fell out of the r11 line and PERF
@@ -287,28 +304,7 @@ def main() -> None:
     # window stays a superset of last round's as long as the budget
     # allows. This is a measurement-reporting fix only — timings,
     # sidecar, and the one-line contract are unchanged.
-    _pinned_line = {
-        "ann_index_persistence_parity", "ann_recall_audit",
-        "ann_recall_floor_audit", "approx_distinct_error_audit",
-        "bigram_logprob", "copurchase_triangles", "doc_cluster_build",
-        "doc_winnow_sketch_checked", "dup_span_coverage",
-        "dup_span_removal", "embedding_near_dup_ivf",
-        "hybrid_related_docs_rrf", "incremental_rollup_parity",
-        "iqr_outlier_filter", "kmeans_clusters_twolevel",
-        "mad_outlier_filter", "md5_minhash_build",
-        "minhash_fastpath_audit", "minhash_near_dup",
-        "minhash_near_dup_checked", "nation_pagerank",
-        "nation_revenue_share", "ngram_jaccard_capped",
-        "ngram_jaccard_pairs", "ngram_jaccard_prefix",
-        "pq_recall_floor_audit", "pq_train_build", "price_quantiles",
-        "price_quantiles_by_flag", "quality_metrics", "semantic_dedup",
-        "semantic_dedup_twolevel", "simhash_fastpath_audit",
-        "simhash_near_dup_checked", "similarity_join_auto",
-        "stateful_sessions_parity", "streaming_dedup_parity",
-        "streaming_join_parity", "streaming_late_drop_parity",
-        "streaming_near_dup_parity", "streaming_session_window_parity",
-        "winnow_share_pairs",
-    }
+    _pinned_line = _previous_line_names()
 
     def line(q: dict) -> str:
         payload = {"metric": "total_query_wall_time", "value": total,

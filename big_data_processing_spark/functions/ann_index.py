@@ -3,17 +3,27 @@
 The per-session operators (functions/similarity.py ``ivfpq_topk``)
 retrain + re-encode per application — right for one-shot analytics,
 wrong for the serving/ingest posture where a 100 TB corpus is
-indexed ONCE and then grows by deltas. This module writes the three
-trained artifacts to parquet and serves queries from the files:
+indexed ONCE and then grows by deltas. This module writes the
+trained artifacts and the codes to parquet and serves queries from
+the files:
 
-- ``{path}/meta.parquet``       one row: (n_cells, m, ksub, dsub, dim)
-- ``{path}/centroids.parquet``  (cell, centroid array<double>)
-- ``{path}/codebooks.parquet``  (j, c, centroid array<double>)
+- ``{path}/artifacts.parquet``  ONE file for all trained artifacts,
+                                read back together: the meta row
+                                (n_cells, m, ksub, dsub, dim,
+                                train_limit), the coarse centroids
+                                (kind "cent", j = cell) and the
+                                codebooks (kind "book", j, c).
 - ``{path}/codes/``             (id, codes array<int>) PARTITIONED BY
                                 cell — a query probing n_probe of
                                 n_cells cells reads only those
                                 partitions (file-level pruning, the
                                 same valve IVF applies in memory).
+
+Every numeric stage is the one ``ivfpq_topk`` runs, imported from
+``similarity.py``: the training sample and memoized trainers, the PQ
+encode kernel, the query tables and the ADC score kernel with its
+batch-local cut. Those kernels pickle by value (see
+``similarity.py``), so a worker imports neither module.
 
 ``extend_ivfpq_index`` encodes ONLY the new rows with the STORED
 codebooks (no retraining — quantizer quality needs only the original
@@ -35,62 +45,14 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_processing_spark.functions.similarity import (
+    _adc_topk,
+    _pq_codes,
+    _query_tables,
     _train_centroids_kmeans_cached,
     _train_pq_codebooks_cached,
+    _train_sample,
 )
-from big_data_processing_spark.operators.windows import topk_per_group
 from big_data_processing_spark.partitioning import spread
-
-
-def _unit(mat):
-    import numpy as np
-
-    norms = np.linalg.norm(mat, axis=1)
-    norms[norms == 0] = 1.0
-    return mat / norms[:, None]
-
-
-def _encode_df(
-    df: DataFrame,
-    books,
-    coarse,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Distributed (cell, codes) encoding of ``df`` under FIXED
-    trained artifacts — the shared kernel of build and extend.
-    Arrow-batched; only (id, cell, codes) ever leaves the worker."""
-    import numpy as np
-    import pandas as pd
-
-    m, ksub, dsub = books.shape
-    bc = df.sparkSession.sparkContext.broadcast(
-        (np.asarray(coarse), np.asarray(books))
-    )
-
-    def kernel(batches):
-        cents, cbooks = bc.value
-        cnorm = np.linalg.norm(cents, axis=1)
-        cnorm[cnorm == 0] = np.inf
-        for pdf in batches:
-            matb = _unit(np.array(list(pdf[vec_col]), dtype=np.float64))
-            cell = np.argmax(matb @ cents.T / cnorm[None, :], axis=1)
-            subs = matb.reshape(len(matb), m, dsub)
-            d2 = ((subs[:, :, None, :] - cbooks[None, :, :, :]) ** 2).sum(
-                axis=3
-            )
-            codes = np.argmin(d2, axis=2).astype("int32")
-            yield pd.DataFrame(
-                {
-                    id_col: pdf[id_col],
-                    "cell": cell.astype("int32"),
-                    "codes": list(codes),
-                }
-            )
-
-    return spread(df.select(id_col, vec_col), id_col).mapInPandas(
-        kernel, schema=f"{id_col} long, cell int, codes array<int>"
-    )
 
 
 def build_ivfpq_index(
@@ -108,18 +70,10 @@ def build_ivfpq_index(
     whole corpus distributed, and persist all three artifacts.
     Training cost is corpus-size-independent; encode is one linear
     Arrow pass; the codes table shuffles only (id, cell, m bytes)."""
-    import numpy as np
-
     spark = corpus.sparkSession
-    train = [
-        r[0]
-        for r in corpus.select(vec_col)
-        .orderBy(id_col)
-        .limit(train_limit)
-        .collect()
-    ]
-    coarse = np.asarray(_train_centroids_kmeans_cached(train, n_cells))
-    books = np.asarray(_train_pq_codebooks_cached(train, m=m, ksub=ksub))
+    train = _train_sample(corpus, id_col, vec_col, train_limit)
+    coarse = _train_centroids_kmeans_cached(train, n_cells)
+    books = _train_pq_codebooks_cached(train, m=m, ksub=ksub)
     dsub = books.shape[2]
     # one-slice parallelize: these frames are a handful of KB, but
     # the default createDataFrame parallelism spreads them over
@@ -168,9 +122,10 @@ def build_ivfpq_index(
     # written contiguously; AQE sizes the task count from bytes, so
     # a 100 TB corpus still gets many tasks per large cell while a
     # bench-scale build gets few well-filled files.
-    _encode_df(corpus, books, coarse, id_col, vec_col).repartition(
-        "cell"
-    ).write.mode("overwrite").partitionBy("cell").parquet(
+    _pq_codes(
+        spread(corpus.select(id_col, vec_col), id_col), id_col, vec_col,
+        books, coarse,
+    ).repartition("cell").write.mode("overwrite").partitionBy("cell").parquet(
         f"{path}/codes"
     )
 
@@ -187,7 +142,7 @@ def _load_artifacts(spark: SparkSession, path: str):
             coarse[r["j"]] = r["centroid"]
         elif r["kind"] == "book":
             books[r["j"], r["c"]] = r["centroid"]
-    return meta, coarse, books
+    return coarse, books
 
 
 def extend_ivfpq_index(
@@ -202,10 +157,11 @@ def extend_ivfpq_index(
     training sample is contained in A) and append them to the cell
     partitions. Cost is linear in the delta, independent of the
     indexed corpus size."""
-    meta, coarse, books = _load_artifacts(delta.sparkSession, path)
-    _encode_df(delta, books, coarse, id_col, vec_col).repartition(
-        "cell"
-    ).write.mode("append").partitionBy("cell").parquet(
+    coarse, books = _load_artifacts(delta.sparkSession, path)
+    _pq_codes(
+        spread(delta.select(id_col, vec_col), id_col), id_col, vec_col,
+        books, coarse,
+    ).repartition("cell").write.mode("append").partitionBy("cell").parquet(
         f"{path}/codes"
     )
 
@@ -229,70 +185,12 @@ def query_ivfpq_index(
     codebooks; ranking/tie-break identical to ivfpq_topk, so a
     persisted index returns exactly what the in-session operator
     would."""
-    import numpy as np
-    import pandas as pd
-
-    meta, coarse, books = _load_artifacts(spark, path)
-    m, dsub = meta["m"], meta["dsub"]
-    qrows = queries.select(id_col, vec_col).orderBy(id_col).collect()
-    qids = [int(r[0]) for r in qrows]
-    qunit = _unit(np.array([list(r[1]) for r in qrows], dtype=np.float64))
-    luts = np.einsum("qjd,jcd->qjc", qunit.reshape(len(qids), m, dsub),
-                     books)
-    cn = np.linalg.norm(coarse, axis=1)
-    cn[cn == 0] = np.inf
-    qsim = qunit @ coarse.T / cn[None, :]
-    probes = np.argsort(-qsim, axis=1)[:, :n_probe]
-    bc_q = spark.sparkContext.broadcast((qids, luts, probes))
-    probe_cells = sorted({int(c) for row in probes for c in row})
-
-    def score_kernel(batches):
-        ids_q, tables, probe_rows = bc_q.value
-        probing: dict[int, list[int]] = {}
-        for qi, cells in enumerate(probe_rows):
-            for c in cells:
-                probing.setdefault(int(c), []).append(qi)
-        jidx = np.arange(m)
-        for pdf in batches:
-            codes = np.array(list(pdf["codes"]), dtype=np.int64)
-            cells = pdf["cell"].to_numpy()
-            ids = pdf[id_col].to_numpy()
-            out_q, out_i, out_s = [], [], []
-            for cell_id, qis in probing.items():
-                mask = cells == cell_id
-                if not mask.any():
-                    continue
-                sub_codes, sub_ids = codes[mask], ids[mask]
-                for qi in qis:
-                    qid = ids_q[qi]
-                    scores = tables[qi][jidx[None, :], sub_codes].sum(
-                        axis=1
-                    )
-                    keep = sub_ids != qid
-                    s, i = scores[keep], sub_ids[keep]
-                    sr = np.round(s, ndigits)
-                    order = np.lexsort((i, -sr))[:k]
-                    out_q.extend([qid] * len(order))
-                    out_i.extend(i[order])
-                    out_s.extend(sr[order])
-            yield pd.DataFrame(
-                {
-                    "query_id": pd.Series(out_q, dtype="int64"),
-                    id_col: pd.Series(out_i, dtype="int64"),
-                    "pq_cos": pd.Series(out_s, dtype="float64"),
-                }
-            )
-
+    coarse, books = _load_artifacts(spark, path)
+    tables = _query_tables(queries, id_col, vec_col, books, coarse, n_probe)
+    probe_cells = sorted({int(c) for row in tables[2] for c in row})
     codes = spark.read.parquet(f"{path}/codes").filter(
         F.col("cell").isin(probe_cells)
     )
-    scored = codes.mapInPandas(
-        score_kernel,
-        schema=f"query_id long, {id_col} long, pq_cos double",
+    return _adc_topk(
+        codes, spark.sparkContext.broadcast(tables), id_col, k, ndigits
     )
-    return topk_per_group(
-        scored,
-        ["query_id"],
-        [F.col("pq_cos").desc(), F.col(id_col)],
-        k,
-    ).select("query_id", id_col, "pq_cos", "rank")

@@ -14,7 +14,8 @@ At 100 TB the numbers that matter are per-stage wall time and task
 counts (shuffle spill and skew show up as one stage dominating);
 this hook is the place a cluster deployment would attach a
 SparkListener for shuffle-bytes/spill metrics — driver-side polling
-is deliberately kept cheap (two O(1) snapshots per stage).
+is deliberately kept cheap (two job-id snapshots per stage, then one
+pass over the jobs that ran inside it).
 """
 
 from __future__ import annotations
@@ -81,12 +82,23 @@ class PipelineMonitor:
         self._spark = spark
         self.records: list[StageRecord] = []
 
-    def _tasks_completed(self) -> int | None:
+    def _job_ids(self) -> set[int] | None:
         if self._spark is None:
             return None
         try:
             tracker = self._spark.sparkContext.statusTracker()
-            jobs = tracker.getJobIdsForGroup(None)
+            return set(tracker.getJobIdsForGroup(None))
+        except Exception:  # noqa: BLE001 — metrics must never fail a run
+            return None
+
+    def _tasks_completed(self, jobs: set[int]) -> int | None:
+        """Completed tasks of ``jobs``. Counted over the jobs that
+        started inside a stage, not as a difference of totals over
+        every retained job: the status store keeps only the last
+        ``spark.ui.retainedJobs`` jobs, and once it evicts old ones
+        such a difference reads 0 or negative."""
+        try:
+            tracker = self._spark.sparkContext.statusTracker()
             total = 0
             for jid in jobs:
                 info = tracker.getJobInfo(jid)
@@ -106,16 +118,16 @@ class PipelineMonitor:
             name=name, wall_sec=0.0, cpu_sec=0.0, peak_rss_mb=0.0
         )
         t0, c0 = time.monotonic(), _cpu_seconds()
-        tasks0 = self._tasks_completed()
+        jobs0 = self._job_ids()
         try:
             yield rec
         finally:
             rec.wall_sec = time.monotonic() - t0
             rec.cpu_sec = _cpu_seconds() - c0
             rec.peak_rss_mb = _peak_rss_mb()
-            tasks1 = self._tasks_completed()
-            if tasks0 is not None and tasks1 is not None:
-                rec.spark_tasks = tasks1 - tasks0
+            jobs1 = self._job_ids()
+            if jobs0 is not None and jobs1 is not None:
+                rec.spark_tasks = self._tasks_completed(jobs1 - jobs0)
             self.records.append(rec)
 
     def report(self) -> list[dict[str, Any]]:

@@ -82,6 +82,25 @@ def spread_even(df: DataFrame) -> DataFrame:
     return df.repartition(n)
 
 
+def _plan_bytes(df: DataFrame) -> int | None:
+    """Catalyst's size estimate for ``df`` in bytes: driver-side plan
+    metadata (file sizes for scans), so no job is launched. None when
+    the private stats handle fails, and when Catalyst has NO estimate
+    — it then reports spark.sql.defaultSizeInBytes (Long.MaxValue by
+    default), which means "unknown", not "huge" (every in-memory test
+    relation would otherwise look enormous). The one read of that
+    handle: its two callers fail soft, so the canaries in
+    tests/test_dedup.py touch it directly and a Spark upgrade that
+    removes it fails loudly."""
+    try:
+        size = int(
+            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception:  # noqa: BLE001 — stats unavailable for some plans
+        return None
+    return None if size >= 1 << 62 else size
+
+
 def spread_arrow(df: DataFrame, *cols: str, target_bytes: int = 8 << 20
                  ) -> DataFrame:
     """Partition count for Arrow/Python kernel inputs sized by input
@@ -100,13 +119,8 @@ def spread_arrow(df: DataFrame, *cols: str, target_bytes: int = 8 << 20
     import math
 
     n_default = df.sparkSession.sparkContext.defaultParallelism
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:  # noqa: BLE001 — stats unavailable for some plans
-        size = None
-    if size is None or size >= 1 << 62:  # unknown ≠ huge (see below)
+    size = _plan_bytes(df)
+    if size is None:
         n = n_default
     else:
         n = max(1, min(10 * n_default, math.ceil(size / target_bytes)))
@@ -141,19 +155,8 @@ def warn_if_quadratic(
     unavailable for some plans)."""
     if allow_quadratic:
         return
-    try:
-        size = int(
-            df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
-        )
-    except Exception:
-        return
-    # Catalyst reports spark.sql.defaultSizeInBytes (Long.MaxValue
-    # by default) when it has NO estimate for a plan — that's
-    # "unknown", not "huge"; warning on it would fire for every
-    # in-memory test relation
-    if size >= 1 << 62:
-        return
-    if size > ceiling_bytes:
+    size = _plan_bytes(df)
+    if size is not None and size > ceiling_bytes:
         import warnings
 
         warnings.warn(

@@ -587,6 +587,40 @@ def test_quadratic_guard_warns_past_ceiling(spark):
         ).collect()
 
 
+def test_spread_arrow_sizes_from_plan_estimate(spark):
+    """spread_arrow sizes Arrow-kernel inputs from the same private
+    Catalyst stats handle as warn_if_quadratic, and falls back to
+    defaultParallelism when the read fails — silently, by design. A
+    Spark upgrade that removes the handle must fail here instead:
+    the sf0.001 embeddings scan (193,646 bytes) at 64 KiB per task
+    is 3 partitions at any core count, where the fallback would be
+    defaultParallelism (4 at 4 cores)."""
+    import math
+
+    from big_data_processing_spark.partitioning import spread_arrow
+    from big_data_processing_spark.sources.catalog import load_table
+    from tests.conftest import SF0001
+
+    scan = load_table(spark, SF0001, "embeddings")
+    try:
+        est = int(
+            scan._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+        )
+    except Exception as e:  # noqa: BLE001
+        raise AssertionError(
+            "Catalyst stats handle gone — spread_arrow (partitioning.py) "
+            f"silently falls back to defaultParallelism on this Spark: {e}"
+        ) from e
+    assert est == 193_646  # the scan's estimate is its file size
+    assert math.ceil(est / (64 << 10)) == 3
+    parts = spread_arrow(scan, "vec_id", target_bytes=64 << 10)
+    assert parts.rdd.getNumPartitions() == 3
+    # no estimate (in-memory relation): the default parallelism
+    df = spark.createDataFrame([(i,) for i in range(10)], "id long")
+    n_default = spark.sparkContext.defaultParallelism
+    assert spread_arrow(df, target_bytes=1).rdd.getNumPartitions() == n_default
+
+
 def test_minhash_audit_linear_on_all_duplicates_corpus(spark, tmp_path):
     """r8 verdict #4: the minhash_fastpath_audit's identical-gram
     containment must stay LINEAR — per-group pair counts, never a

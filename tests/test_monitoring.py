@@ -26,6 +26,36 @@ def test_monitor_records_stages(spark):
     assert len(lines) == 2 and "wall=" in lines[0]
 
 
+def test_monitor_task_count_survives_job_eviction():
+    """The status store keeps only the last spark.ui.retainedJobs
+    jobs. A stage's task count comes from the jobs that ran inside
+    it; a difference of totals over the retained jobs read 0 or
+    negative once old jobs were evicted (seen in a long test
+    session)."""
+    from types import SimpleNamespace
+
+    class Tracker:  # job id == its one stage id → completed tasks
+        tasks = {1: 5, 2: 5}
+
+        def getJobIdsForGroup(self, group):
+            return list(self.tasks)
+
+        def getJobInfo(self, jid):
+            return SimpleNamespace(stageIds=[jid])
+
+        def getStageInfo(self, sid):
+            return SimpleNamespace(numCompletedTasks=self.tasks[sid])
+
+    tracker = Tracker()
+    spark = SimpleNamespace(
+        sparkContext=SimpleNamespace(statusTracker=lambda: tracker)
+    )
+    mon = PipelineMonitor(spark)
+    with mon.stage("count"):
+        tracker.tasks = {2: 5, 3: 2}  # job 1 evicted, job 3 ran 2 tasks
+    assert mon.report()[0]["spark_tasks"] == 2
+
+
 def test_monitor_records_failure_stage(spark):
     mon = PipelineMonitor()
     try:

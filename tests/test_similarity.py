@@ -475,35 +475,72 @@ def test_ivfpq_topk_contract(spark):
     assert sorted(map(tuple, rows)) == sorted(map(tuple, again))
 
 
-def test_warm_pq_training_covers_registered_pq_queries(spark):
+def test_warm_pq_training_covers_registered_pq_queries(spark, monkeypatch):
     """warm_pq_training's default parameter sets (the shared
     REGISTERED_PQ_PARAMS / REGISTERED_IVF_CELLS constants the plan
-    registrations import) must cover EVERY registered PQ-family
-    query: after warming, executing each query adds zero training
-    cache entries. A new PQ query registered with literals outside
-    the shared constants would fail here — the guard against
-    silently reintroducing the cold/warm bench skew the pq_train
-    build entry exists to remove."""
-    from big_data_processing_spark.functions.similarity import (
-        _TRAIN_CACHE,
-        warm_pq_training,
-    )
+    registrations import) must cover EVERY registered query that
+    trains a PQ codebook or an IVF quantizer: after warming,
+    executing each query adds zero training cache entries and never
+    calls a raw trainer (a query that bypassed the memo would retrain
+    on every call, and the warm entry would never serve it). A new
+    query registered with literals outside the shared constants
+    would fail here — the guard against silently reintroducing the
+    cold/warm bench skew the pq_train build entry exists to
+    remove."""
+    from big_data_processing_spark.functions import similarity
     from big_data_processing_spark.plans.registry import SPECS
     from big_data_processing_spark.sources.catalog import load_table
     from tests.conftest import SF0001
 
-    warm_pq_training(load_table(spark, SF0001, "embeddings"))
-    before = len(_TRAIN_CACHE)
+    similarity.warm_pq_training(load_table(spark, SF0001, "embeddings"))
+    before = len(similarity._TRAIN_CACHE)
+    calls = []
+    for trainer in ("_train_centroids_kmeans", "_train_pq_codebooks"):
+        raw = getattr(similarity, trainer)
+
+        def counted(*args, _raw=raw, _name=trainer, **kwargs):
+            calls.append(_name)
+            return _raw(*args, **kwargs)
+
+        monkeypatch.setattr(similarity, trainer, counted)
     for name in (
         "cosine_topk_pq",
         "cosine_topk_pq_rerank",
         "cosine_topk_ivfpq",
         "pq_recall_floor_audit",
+        "cosine_topk_ivf",
+        "cosine_topk_ivf_fullprobe",
+        "embedding_near_dup_ivf",
+        "ann_recall_audit",
+        "ann_recall_floor_audit",
     ):
         SPECS[name].fn(spark, SF0001).count()
-        assert len(_TRAIN_CACHE) == before, (
+        assert len(similarity._TRAIN_CACHE) == before, (
             f"{name} trained outside the warmed parameter sets"
         )
+        assert not calls, f"{name} bypassed the training memo: {calls}"
+
+
+def test_pq_adc_equals_full_probe_ivfpq(spark):
+    """Plain PQ and IVF-PQ share one ADC score kernel (no-probe vs
+    probe mode). Probing every cell scores every row once with the
+    same codes and tables, so the two modes must return the same
+    rows — the oracle gate checks these queries by row count only."""
+    from big_data_processing_spark.functions.similarity import (
+        ivfpq_topk,
+        pq_adc_topk,
+    )
+    from big_data_processing_spark.sources.catalog import load_table
+    from tests.conftest import SF0001
+
+    emb = load_table(spark, SF0001, "embeddings")
+    queries = emb.filter(F.col("vec_id") < 5)
+    adc = pq_adc_topk(emb, queries, k=5, m=32, ksub=256).collect()
+    full = ivfpq_topk(
+        emb, queries, k=5, n_cells=16, n_probe=16, m=32, ksub=256
+    ).collect()
+    assert len(adc) == 25
+    assert sorted(map(tuple, adc)) == sorted(map(tuple, full))
 
 
 def test_persisted_ann_index_contract(spark, tmp_path):
@@ -548,3 +585,58 @@ def test_persisted_ann_index_contract(spark, tmp_path):
     codes = spark.read.parquet(f"{path}/codes")
     assert codes.count() == n_before + delta.count()
     assert codes.filter(F.col("vec_id") >= 100000).count() == delta.count()
+
+
+def test_vector_kernels_pickle_by_value(tmp_path):
+    """A session's Python workers import from the driver's working
+    directory at session start, which need not be the checkout. The
+    vector kernels therefore pickle by value: unpickled in a fresh
+    interpreter that cannot import the package, the IVF-PQ encode and
+    ADC score kernels run and return what they return in-process."""
+    import os
+    import subprocess
+    import sys
+    from functools import partial
+    from types import SimpleNamespace
+
+    import numpy as np
+    import pandas as pd
+    from pyspark import cloudpickle
+
+    from big_data_processing_spark.functions import similarity as S
+
+    rng = np.random.RandomState(5)
+    vecs = rng.randn(40, 8)
+    books = S._train_pq_codebooks(vecs, m=4, ksub=8)
+    coarse = S._train_centroids_kmeans(vecs, 3)
+    qids = [0, 1]
+    luts = np.einsum(
+        "qjd,jcd->qjc", S._unit(vecs[:2]).reshape(2, 4, 2), books
+    )
+    probes = np.array([[0, 1], [2, 0]])
+    encode = partial(
+        S._pq_encode, SimpleNamespace(value=(coarse, books)), "vec_id",
+        "embedding",
+    )
+    score = partial(
+        S._adc_score, SimpleNamespace(value=(qids, luts, probes)), "vec_id",
+        3, 6,
+    )
+    corpus = pd.DataFrame({"vec_id": range(40), "embedding": list(vecs)})
+    want = pd.concat(score(encode([corpus]))).to_json()
+    child = (
+        "import importlib.util, pickle, sys\n"
+        "import pandas as pd\n"
+        "assert not importlib.util.find_spec('big_data_processing_spark')\n"
+        "encode, score, corpus = pickle.loads(sys.stdin.buffer.read())\n"
+        "print(pd.concat(score(encode([corpus]))).to_json())\n"
+        "assert not [m for m in sys.modules if m.startswith('big_data')]\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    out = subprocess.run(
+        [sys.executable, "-c", child],
+        input=cloudpickle.dumps((encode, score, corpus)),
+        capture_output=True, cwd=tmp_path, env=env, timeout=120,
+    )
+    assert out.returncode == 0, out.stderr.decode()
+    assert out.stdout.decode().strip() == want
